@@ -4,9 +4,11 @@ The reference receives ``pmetricotlp.ExportRequest`` over gRPC and walks
 ResourceMetrics -> ScopeMetrics -> Metrics -> DataPoints imperatively
 (``internal/receiver/otlp.go:91-285``). Spark has no gRPC source, so the
 ingest edge stays a thin adapter (Kafka topic / file drop of OTLP JSON
-payloads); everything after the wire format is expressed here as a
+payloads); everything after the wire format is expressed here as one
 declarative explode chain - the distributed equivalent of the triple loop,
-fully column-pruned and codegen'd.
+fully column-pruned and codegen'd. The five metric types share that chain:
+each maps its data points into one common point struct, and the points of
+all types explode together, so every request is read once per batch.
 
 Input contract: a DataFrame with one row per ExportRequest, column
 ``resourceMetrics`` shaped like OTLP/JSON (see ``OTLP_EXPORT_SCHEMA``).
@@ -22,6 +24,7 @@ from pyspark.sql import types as T
 
 from clickhouse_metrics_pipeline_spark.functions.hashing import series_hash
 from clickhouse_metrics_pipeline_spark.schema import (
+    EXEMPLAR_TYPE,
     METRIC_TYPE_EXP_HISTOGRAM,
     METRIC_TYPE_GAUGE,
     METRIC_TYPE_HISTOGRAM,
@@ -205,6 +208,38 @@ OTLP_EXPORT_SCHEMA = T.StructType(
 )
 
 
+_EXP_BUCKETS = T.ArrayType(
+    T.StructType([T.StructField("index", T.IntegerType()), T.StructField("count", T.LongType())])
+)
+
+# One data point of any metric type, as the per-type rules of
+# ``flatten_otlp`` fill it in: the metrics_raw columns a point carries
+# as they are, then the raw fields converted once for every type.
+_POINT = T.StructType(
+    [
+        T.StructField("metric_type", T.ByteType(), False),
+        T.StructField("temporality", T.ByteType(), False),
+        T.StructField("is_monotonic", T.BooleanType(), False),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("count", T.LongType()),
+        T.StructField("sum", T.DoubleType()),
+        T.StructField(
+            "buckets",
+            T.ArrayType(T.StructType([T.StructField("le", T.DoubleType()), T.StructField("count", T.LongType())])),
+        ),
+        T.StructField("exp_scale", T.IntegerType()),
+        T.StructField("exp_zero_count", T.LongType()),
+        T.StructField("exp_zero_threshold", T.DoubleType()),
+        T.StructField("exp_positive_buckets", _EXP_BUCKETS),
+        T.StructField("exp_negative_buckets", _EXP_BUCKETS),
+        T.StructField("timeUnixNano", T.StringType()),
+        T.StructField("attributes", _KV),
+        T.StructField("exemplars", EXEMPLAR_TYPE),
+    ]
+)
+_CARRIED = _POINT.names[:-3]
+
+
 def otlp_json_stream(
     spark,
     drop_dir: str,
@@ -276,181 +311,138 @@ def _merged_attrs(resource_attrs: Column, dp_attrs: Column) -> Column:
 
 
 def flatten_otlp(requests: DataFrame, workspace_id: str = "default") -> DataFrame:
-    """ExportRequest rows -> metrics_raw rows (S2+S3+F5-F7 in one plan).
+    """ExportRequest rows -> metrics_raw rows (S2+S3+F5-F7 in one pass).
 
-    The 4-level nesting flattens with explode; each metric type contributes
-    its own branch, unioned into the sparse wide-row schema. Catalyst
-    prunes unused branches per query; the unions don't shuffle.
+    resourceMetrics, scopeMetrics and metrics explode once. Each metric
+    type maps its ``dataPoints`` into the common ``_POINT`` struct with
+    its own conversion rule; the five arrays concatenate (a missing type
+    adds none) and explode once. The source is read once per batch, and
+    the attribute merge, ``service.name`` promotion and series hash
+    apply to every type in one place.
     """
-    base = (
+    m = F.col("m")
+
+    def number(dp: Column) -> Column:
+        # int-or-double coercion (otlp.go:139-186)
+        return F.coalesce(dp["asDouble"], dp["asInt"].cast("double"))
+
+    def points(mtype: int, dps: Column, temporality=F.lit(0), monotonic=F.lit(False), **rules) -> Column:
+        """One type's data points as ``_POINT`` array; ``rules`` fill
+        the type's own fields from the data point, the rest stay NULL."""
+        def point(dp: Column) -> Column:
+            given = {
+                "metric_type": F.lit(mtype).cast("tinyint"),
+                "temporality": temporality.cast("tinyint"),
+                "is_monotonic": monotonic,
+                "timeUnixNano": dp["timeUnixNano"],
+                "attributes": dp["attributes"],
+                **{name: rule(dp) for name, rule in rules.items()},
+            }
+            return F.struct(*[given.get(n, F.lit(None)).alias(n) for n in _POINT.names])
+
+        typed = T.ArrayType(_POINT, containsNull=False)
+        return F.coalesce(F.transform(dps, point).cast(typed), F.array().cast(typed))
+
+    def hist_buckets(dp: Column) -> Column:
+        # zip explicitBounds + bucketCounts with the +Inf tail (otlp.go:188-232)
+        counts = F.coalesce(dp["bucketCounts"], F.array().cast("array<string>"))
+        bounds = F.concat(
+            F.coalesce(dp["explicitBounds"], F.array().cast("array<double>")),
+            F.array(F.lit(float("inf"))),
+        )
+        zipped = F.zip_with(
+            bounds,
+            counts,
+            lambda le, c: F.struct(
+                le.alias("le"), F.coalesce(c.cast("bigint"), F.lit(0).cast("bigint")).alias("count")
+            ),
+        )
+        return F.when(F.size(counts) > 0, zipped)
+
+    def exp_buckets(side: str):
+        # dense offset form -> sparse (index, count); an empty side is NULL
+        def rule(dp: Column) -> Column:
+            bc = F.coalesce(dp[side]["bucketCounts"], F.array().cast("array<string>"))
+            off = F.coalesce(dp[side]["offset"], F.lit(0))
+            arr = F.transform(
+                bc, lambda c, i: F.struct((off + i).cast("int").alias("index"), c.cast("bigint").alias("count"))
+            )
+            return F.when(F.size(bc) > 0, F.filter(arr, lambda x: x["count"] > 0))
+
+        return rule
+
+    def count(dp: Column) -> Column:
+        return dp["count"].cast("bigint")
+
+    def total(dp: Column) -> Column:
+        return dp["sum"]
+
+    def exemplars(dp: Column) -> Column:
+        return _exemplars(dp["exemplars"])
+
+    all_points = F.concat(
+        # gauge (otlp.go:139-160)
+        points(METRIC_TYPE_GAUGE, m["gauge"]["dataPoints"], value=number, exemplars=exemplars),
+        # sum (otlp.go:162-186)
+        points(
+            METRIC_TYPE_SUM,
+            m["sum"]["dataPoints"],
+            _temporality(m["sum"]["aggregationTemporality"]),
+            F.coalesce(m["sum"]["isMonotonic"], F.lit(False)),
+            value=number,
+            exemplars=exemplars,
+        ),
+        # histogram (otlp.go:188-232)
+        points(
+            METRIC_TYPE_HISTOGRAM,
+            m["histogram"]["dataPoints"],
+            _temporality(m["histogram"]["aggregationTemporality"]),
+            count=count,
+            sum=total,
+            buckets=hist_buckets,
+            exemplars=exemplars,
+        ),
+        # exponential histogram: FULL path incl. buckets. The reference
+        # drops exp buckets on ingest (otlp.go:234-258 takes only
+        # count/sum; writer.go:206-212 inserts empty arrays) - documented
+        # fix, the schema and math library support them end-to-end here.
+        points(
+            METRIC_TYPE_EXP_HISTOGRAM,
+            m["exponentialHistogram"]["dataPoints"],
+            _temporality(m["exponentialHistogram"]["aggregationTemporality"]),
+            count=count,
+            sum=total,
+            exp_scale=lambda dp: F.coalesce(dp["scale"], F.lit(0)),
+            exp_zero_count=lambda dp: F.coalesce(dp["zeroCount"].cast("bigint"), F.lit(0).cast("bigint")),
+            exp_zero_threshold=lambda dp: F.coalesce(dp["zeroThreshold"], F.lit(0.0)),
+            exp_positive_buckets=exp_buckets("positive"),
+            exp_negative_buckets=exp_buckets("negative"),
+        ),
+        # summary (otlp.go:260-283)
+        points(METRIC_TYPE_SUMMARY, m["summary"]["dataPoints"], count=count, sum=total),
+    )
+    rows = (
         requests.select(F.explode("resourceMetrics").alias("rm"))
         .select(
             F.col("rm.resource.attributes").alias("res_attrs"),
             F.explode("rm.scopeMetrics").alias("sm"),
         )
         .select("res_attrs", F.explode("sm.metrics").alias("m"))
+        .select("res_attrs", m["name"].alias("metric"), F.explode(all_points).alias("p"))
     )
-    # service.name promotion (otlp.go:100-110)
-    service = F.element_at(_attrs_to_map(F.col("res_attrs")), "service.name")
-
-    def common(mtype: int, temporality: Column, monotonic: Column, dp_attrs: Column):
-        attrs = _merged_attrs(F.col("res_attrs"), dp_attrs)
-        return [
-            F.lit(workspace_id).alias("workspaceId"),
-            F.lit(0).cast("bigint").alias("series_hash"),
-            F.col("m.name").alias("metric"),
-            service.alias("serviceName"),
-            _ts(F.col("dp.timeUnixNano")).alias("timestamp"),
-            F.lit(mtype).cast("tinyint").alias("metric_type"),
-            temporality.cast("tinyint").alias("temporality"),
-            monotonic.alias("is_monotonic"),
-        ]
-
-    def tail(attrs_col: Column, exemplars_col: Column):
-        return [
-            attrs_col.alias("attributes"),
-            exemplars_col.alias("exemplars"),
-            F.lit(None).cast("timestamp").alias("_ttl"),
-        ]
-
-    null_buckets = F.lit(None).cast(
-        "array<struct<le: double, count: bigint>>"
+    p = F.col("p")
+    out = rows.select(
+        F.lit(workspace_id).alias("workspaceId"),
+        F.lit(0).cast("bigint").alias("series_hash"),
+        "metric",
+        # service.name promotion (otlp.go:100-110)
+        F.element_at(_attrs_to_map(F.col("res_attrs")), "service.name").alias("serviceName"),
+        _ts(p["timeUnixNano"]).alias("timestamp"),
+        *[p[n].alias(n) for n in _CARRIED],
+        _merged_attrs(F.col("res_attrs"), p["attributes"]).alias("attributes"),
+        p["exemplars"].alias("exemplars"),
+        F.lit(None).cast("timestamp").alias("_ttl"),
     )
-    null_exp = F.lit(None).cast("array<struct<index: int, count: bigint>>")
-    nulls_exp_scalar = [
-        F.lit(None).cast("int").alias("exp_scale"),
-        F.lit(None).cast("bigint").alias("exp_zero_count"),
-        F.lit(None).cast("double").alias("exp_zero_threshold"),
-        null_exp.alias("exp_positive_buckets"),
-        null_exp.alias("exp_negative_buckets"),
-    ]
-
-    # gauge (otlp.go:139-160): int-or-double coercion
-    gauges = base.where(F.col("m.gauge").isNotNull()).select(
-        "res_attrs", "m", F.explode("m.gauge.dataPoints").alias("dp")
-    )
-    gauge_rows = gauges.select(
-        *common(METRIC_TYPE_GAUGE, F.lit(0), F.lit(False), F.col("dp.attributes")),
-        F.coalesce(F.col("dp.asDouble"), F.col("dp.asInt").cast("double")).alias("value"),
-        F.lit(None).cast("bigint").alias("count"),
-        F.lit(None).cast("double").alias("sum"),
-        null_buckets.alias("buckets"),
-        *nulls_exp_scalar,
-        *tail(_merged_attrs(F.col("res_attrs"), F.col("dp.attributes")), _exemplars(F.col("dp.exemplars"))),
-    )
-
-    # sum (otlp.go:162-186)
-    sums = base.where(F.col("m.sum").isNotNull()).select(
-        "res_attrs", "m", F.explode("m.sum.dataPoints").alias("dp")
-    )
-    sum_rows = sums.select(
-        *common(
-            METRIC_TYPE_SUM,
-            _temporality(F.col("m.sum.aggregationTemporality")),
-            F.coalesce(F.col("m.sum.isMonotonic"), F.lit(False)),
-            F.col("dp.attributes"),
-        ),
-        F.coalesce(F.col("dp.asDouble"), F.col("dp.asInt").cast("double")).alias("value"),
-        F.lit(None).cast("bigint").alias("count"),
-        F.lit(None).cast("double").alias("sum"),
-        null_buckets.alias("buckets"),
-        *nulls_exp_scalar,
-        *tail(_merged_attrs(F.col("res_attrs"), F.col("dp.attributes")), _exemplars(F.col("dp.exemplars"))),
-    )
-
-    # histogram (otlp.go:188-232): zip explicitBounds + bucketCounts, +Inf tail
-    hists = base.where(F.col("m.histogram").isNotNull()).select(
-        "res_attrs", "m", F.explode("m.histogram.dataPoints").alias("dp")
-    )
-    bounds_with_inf = F.concat(
-        F.coalesce(F.col("dp.explicitBounds"), F.array().cast("array<double>")),
-        F.array(F.lit(float("inf"))),
-    )
-    buckets = F.zip_with(
-        bounds_with_inf,
-        F.coalesce(F.col("dp.bucketCounts"), F.array().cast("array<string>")),
-        lambda le, c: F.struct(
-            le.alias("le"),
-            F.coalesce(c.cast("bigint"), F.lit(0).cast("bigint")).alias("count"),
-        ),
-    )
-    hist_rows = hists.select(
-        *common(
-            METRIC_TYPE_HISTOGRAM,
-            _temporality(F.col("m.histogram.aggregationTemporality")),
-            F.lit(False),
-            F.col("dp.attributes"),
-        ),
-        F.lit(None).cast("double").alias("value"),
-        F.col("dp.count").cast("bigint").alias("count"),
-        F.col("dp.sum").alias("sum"),
-        F.when(F.size(F.coalesce(F.col("dp.bucketCounts"), F.array().cast("array<string>"))) > 0, buckets)
-        .otherwise(null_buckets)
-        .alias("buckets"),
-        *nulls_exp_scalar,
-        *tail(_merged_attrs(F.col("res_attrs"), F.col("dp.attributes")), _exemplars(F.col("dp.exemplars"))),
-    )
-
-    # exponential histogram: FULL path incl. buckets. The reference drops
-    # exp buckets on ingest (otlp.go:234-258 takes only count/sum;
-    # writer.go:206-212 inserts empty arrays) - documented fix, the schema
-    # and math library support them end-to-end here.
-    exps = base.where(F.col("m.exponentialHistogram").isNotNull()).select(
-        "res_attrs", "m", F.explode("m.exponentialHistogram.dataPoints").alias("dp")
-    )
-
-    def dense_buckets(side: str) -> Column:
-        bc = F.coalesce(F.col(f"dp.{side}.bucketCounts"), F.array().cast("array<string>"))
-        off = F.coalesce(F.col(f"dp.{side}.offset"), F.lit(0))
-        arr = F.transform(
-            bc,
-            lambda c, i: F.struct(
-                (off + i).cast("int").alias("index"),
-                c.cast("bigint").alias("count"),
-            ),
-        )
-        return F.when(F.size(bc) > 0, F.filter(arr, lambda x: x["count"] > 0)).otherwise(null_exp)
-
-    exp_rows = exps.select(
-        *common(
-            METRIC_TYPE_EXP_HISTOGRAM,
-            _temporality(F.col("m.exponentialHistogram.aggregationTemporality")),
-            F.lit(False),
-            F.col("dp.attributes"),
-        ),
-        F.lit(None).cast("double").alias("value"),
-        F.col("dp.count").cast("bigint").alias("count"),
-        F.col("dp.sum").alias("sum"),
-        null_buckets.alias("buckets"),
-        F.coalesce(F.col("dp.scale"), F.lit(0)).alias("exp_scale"),
-        F.coalesce(
-            F.col("dp.zeroCount").cast("bigint"), F.lit(0).cast("bigint")
-        ).alias("exp_zero_count"),
-        F.coalesce(F.col("dp.zeroThreshold"), F.lit(0.0)).alias("exp_zero_threshold"),
-        dense_buckets("positive").alias("exp_positive_buckets"),
-        dense_buckets("negative").alias("exp_negative_buckets"),
-        *tail(_merged_attrs(F.col("res_attrs"), F.col("dp.attributes")), F.lit(None).cast(
-            "array<struct<spanId: string, traceId: string, value: double, timestamp: timestamp, attributes: map<string,string>>>"
-        )),
-    )
-
-    # summary (otlp.go:260-283)
-    summaries = base.where(F.col("m.summary").isNotNull()).select(
-        "res_attrs", "m", F.explode("m.summary.dataPoints").alias("dp")
-    )
-    summary_rows = summaries.select(
-        *common(METRIC_TYPE_SUMMARY, F.lit(0), F.lit(False), F.col("dp.attributes")),
-        F.lit(None).cast("double").alias("value"),
-        F.col("dp.count").cast("bigint").alias("count"),
-        F.col("dp.sum").alias("sum"),
-        null_buckets.alias("buckets"),
-        *nulls_exp_scalar,
-        *tail(_merged_attrs(F.col("res_attrs"), F.col("dp.attributes")), F.lit(None).cast(
-            "array<struct<spanId: string, traceId: string, value: double, timestamp: timestamp, attributes: map<string,string>>>"
-        )),
-    )
-
-    out = gauge_rows.unionByName(sum_rows).unionByName(hist_rows).unionByName(exp_rows).unionByName(summary_rows)
     # K1: canonical deterministic series hash (writer.go:105-116, fixed)
     return out.withColumn(
         "series_hash", series_hash("metric", "workspaceId", "attributes")

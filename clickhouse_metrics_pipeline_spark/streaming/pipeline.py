@@ -194,12 +194,12 @@ def delta_convert_stream(df: DataFrame, state_ttl: bool = True) -> DataFrame:
     ``split_buckets`` below. Watermark bounds state for late data.
 
     ``state_ttl=False`` disables the processing-time idle-series
-    eviction (GroupStateTimeout.NoTimeout). Use it for bounded
-    availableNow replays: a registered processing-time timeout makes
-    Trigger.AvailableNow schedule micro-batches until the timeout
-    fires (measured: 3h TTL -> batch-per-second forever, the drain
-    never terminates), while a long-lived continuous deployment keeps
-    the default eviction."""
+    eviction (GroupStateTimeout.NoTimeout). With the default timeout
+    every trigger runs a batch even without new data, so an AvailableNow
+    query over this operator never terminates on its own. The timeout
+    mode is part of the state value schema: a checkpoint cannot be
+    restarted under the other ``state_ttl``
+    (``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``)."""
     if state_ttl:
         fn, conf = _convert_group, GroupStateTimeout.ProcessingTimeTimeout
     else:
@@ -968,8 +968,11 @@ def ingest_stream(
 ):
     """Full streaming ingest: validate -> stamp -> delta-convert ->
     partitioned parquet sink, 10 s trigger (cmd/main.go:181-207 defaults).
-    ``available_now=True`` drains the source and stops — the batch-drain
-    mode for catch-up runs and tests.
+    ``available_now=True`` drains the source — the batch-drain mode for
+    catch-up runs and tests. The drain never terminates on its own (see
+    :func:`delta_convert_stream`): once a progress report shows no input
+    rows the backlog is committed, and the caller stops the query. The
+    processing-time query can continue on the drain's checkpoint.
 
     The sink is IDEMPOTENT UNDER REPLAY, not just under clean restart:
     rows land under ``date=D/batch=K`` and each micro-batch writes with

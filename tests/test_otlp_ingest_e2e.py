@@ -24,6 +24,21 @@ _NOW_NS = (int(time.time()) - 120) * 1_000_000_000  # 2 min ago: inside the
 # validation window (now-7d .. now+24h); whole seconds so timestamps are exact
 
 
+def _drain(q, timeout_s=120):
+    """Wait until an ``available_now`` ingest drain has committed its
+    backlog, stop it, and return its progress reports. The drain does
+    not end by itself (see ``ingest_stream``): the first batch that read
+    no input shows that every batch before it is committed."""
+    deadline = time.time() + timeout_s
+    try:
+        while not any(p.numInputRows == 0 for p in q.recentProgress):
+            assert q.isActive and time.time() < deadline, q.exception()
+            time.sleep(0.2)
+        return q.recentProgress
+    finally:
+        q.stop()
+
+
 def _kv(k, s=None, i=None, d=None, b=None):
     return {"key": k, "value": {"stringValue": s, "intValue": i,
                                 "doubleValue": d, "boolValue": b}}
@@ -97,7 +112,8 @@ def test_otlp_json_drop_to_parquet_end_to_end(spark, tmp_path):
         workspace_id="integration_test",
         available_now=True,  # drain the drop dir, then stop
     )
-    q.awaitTermination(120)
+    # each export request is read once, whatever metric types it carries
+    assert sum(p.numInputRows for p in _drain(q)) == 1
 
     res = spark.read.parquet(out)
     rows = res.collect()
@@ -156,5 +172,55 @@ def test_otlp_json_drop_to_parquet_end_to_end(spark, tmp_path):
         workspace_id="integration_test",
         available_now=True,
     )
-    q2.awaitTermination(120)
+    assert sum(p.numInputRows for p in _drain(q2)) == 0
     assert spark.read.parquet(out).count() == len(rows)
+
+
+def _counter_request(t0_ns, values):
+    """One cumulative monotonic counter series, one point a second."""
+    return {"resourceMetrics": [{
+        "resource": {"attributes": [_kv("service.name", s="restart")]},
+        "scopeMetrics": [{"metrics": [{
+            "name": "restarts_total",
+            "sum": {
+                "aggregationTemporality": 2,
+                "isMonotonic": True,
+                "dataPoints": [
+                    {"timeUnixNano": t0_ns + i * 1_000_000_000,
+                     "asInt": v, "attributes": [_kv("pod", s="p1")]}
+                    for i, v in enumerate(values)
+                ],
+            },
+        }]}],
+    }]}
+
+
+@pytest.mark.slow
+def test_drain_then_processing_time_restart_continues_deltas(spark, tmp_path):
+    """A drain and the processing-time ingest share one checkpoint: the
+    restarted query reads the drain's converter state (same state schema)
+    and continues the deltas without a second first point and without
+    re-reading the drained file."""
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    (drop / "export-0001.json").write_text(
+        json.dumps(_counter_request(_NOW_NS, [100, 150])) + "\n")
+    _drain(ingest_stream(otlp_json_stream(spark, str(drop)), out, ckpt,
+                         available_now=True))
+
+    (drop / "export-0002.json").write_text(
+        json.dumps(_counter_request(_NOW_NS + 2_000_000_000, [200, 260])) + "\n")
+    q = ingest_stream(otlp_json_stream(spark, str(drop)), out, ckpt,
+                      trigger_seconds=1)
+    try:
+        deadline = time.time() + 120
+        # progress is reported after the batch's sink write commits
+        while not any(p.numInputRows for p in q.recentProgress):
+            assert q.isActive and time.time() < deadline, q.exception()
+            time.sleep(0.5)
+    finally:
+        q.stop()
+    rows = sorted(spark.read.parquet(out).collect(), key=lambda r: r.timestamp)
+    assert [r.value for r in rows] == [100.0, 50.0, 50.0, 60.0]
+    assert {r.temporality for r in rows} == {2}

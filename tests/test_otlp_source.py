@@ -6,7 +6,9 @@ service.name promotion, datapoint-wins attribute merge, OTLP->internal
 temporality mapping, int-or-double value coercion, histogram bucket
 zip with the +Inf tail, exponential dense->sparse bucket conversion
 (the documented fix: the reference drops exp buckets on ingest), and
-exemplar conversion with int/double coercion.
+exemplar conversion with int/double coercion. Edge payloads and the
+output schema (nullability included) pin the flattener's contract, and
+a plan test pins that it reads its source once.
 """
 
 from __future__ import annotations
@@ -15,6 +17,7 @@ import json
 import math
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from clickhouse_metrics_pipeline_spark.schema import (
     METRIC_TYPE_EXP_HISTOGRAM,
@@ -134,16 +137,21 @@ def _request():
     }
 
 
-def _flatten(spark):
+def _flatten_payload(spark, payload):
     # route through the JSON reader like production ingest does (r9:
     # the int64 fields read as strings per protojson, so a raw python
     # dict with ints no longer matches the read schema directly)
     df = (
-        spark.createDataFrame([(json.dumps(_request()),)], "value STRING")
+        spark.createDataFrame([(json.dumps(payload),)], "value STRING")
         .select(F.from_json("value", OTLP_EXPORT_SCHEMA).alias("r"))
         .select("r.*")
     )
-    return {r.metric: r for r in flatten_otlp(df, workspace_id="w1").collect()}
+    return flatten_otlp(df, workspace_id="w1")
+
+
+def _flatten(spark, payload=None):
+    rows = _flatten_payload(spark, payload or _request()).collect()
+    return {r.metric: r for r in rows}
 
 
 def test_flattens_all_five_types_with_per_type_rules(spark):
@@ -238,19 +246,8 @@ def test_protojson_string_int64_form_parses_identically(spark):
             return [stringify(x) for x in obj]
         return obj
 
-    def flatten_payload(payload):
-        df = (
-            spark.createDataFrame([(json.dumps(payload),)], "value STRING")
-            .select(F.from_json("value", OTLP_EXPORT_SCHEMA).alias("r"))
-            .select("r.*")
-        )
-        return {
-            r.metric: r
-            for r in flatten_otlp(df, workspace_id="w1").collect()
-        }
-
-    numeric = flatten_payload(_request())
-    quoted = flatten_payload(stringify(_request()))
+    numeric = _flatten(spark)
+    quoted = _flatten(spark, stringify(_request()))
     assert set(numeric) == set(quoted) and numeric
     for m in numeric:
         a, b = numeric[m], quoted[m]
@@ -260,3 +257,126 @@ def test_protojson_string_int64_form_parses_identically(spark):
         assert a.exp_zero_count == b.exp_zero_count
         assert a.exp_positive_buckets == b.exp_positive_buckets
         assert a.attributes == b.attributes
+
+
+def _f(name, dtype, nullable=True):
+    return T.StructField(name, dtype, nullable)
+
+
+_STR_MAP = T.MapType(T.StringType(), T.StringType())
+_INDEXED = T.ArrayType(
+    T.StructType([_f("index", T.IntegerType()), _f("count", T.LongType())])
+)
+# the metrics_raw rows flatten_otlp returns, nullability included
+_FLAT_SCHEMA = T.StructType(
+    [
+        _f("workspaceId", T.StringType(), False),
+        _f("series_hash", T.LongType(), False),
+        _f("metric", T.StringType()),
+        _f("serviceName", T.StringType()),
+        _f("timestamp", T.TimestampType()),
+        _f("metric_type", T.ByteType(), False),
+        _f("temporality", T.ByteType(), False),
+        _f("is_monotonic", T.BooleanType(), False),
+        _f("value", T.DoubleType()),
+        _f("count", T.LongType()),
+        _f("sum", T.DoubleType()),
+        _f("buckets", T.ArrayType(
+            T.StructType([_f("le", T.DoubleType()), _f("count", T.LongType())])
+        )),
+        _f("exp_scale", T.IntegerType()),
+        _f("exp_zero_count", T.LongType()),
+        _f("exp_zero_threshold", T.DoubleType()),
+        _f("exp_positive_buckets", _INDEXED),
+        _f("exp_negative_buckets", _INDEXED),
+        _f("attributes", _STR_MAP, False),
+        _f("exemplars", T.ArrayType(T.StructType([
+            _f("spanId", T.StringType()),
+            _f("traceId", T.StringType()),
+            _f("value", T.DoubleType()),
+            _f("timestamp", T.TimestampType()),
+            _f("attributes", _STR_MAP),
+        ]))),
+        _f("_ttl", T.TimestampType()),
+    ]
+)
+
+
+def test_output_schema_is_pinned(spark):
+    """metric_type, temporality and is_monotonic stay non-nullable for
+    the validator and the sink; every nested type keeps its nullability."""
+    assert _flatten_payload(spark, _request()).schema == _FLAT_SCHEMA
+
+
+def test_edge_payloads(spark):
+    def dp(**kw):
+        return {"timeUnixNano": _NS, "attributes": [_kv("a", s="x")], **kw}
+
+    metrics = [
+        # one metric carrying two types flattens to a row of each
+        {
+            "name": "dual",
+            "gauge": {"dataPoints": [dp(asDouble=1.5)]},
+            "sum": {
+                "dataPoints": [dp(asInt=7)],
+                "aggregationTemporality": 2,
+                "isMonotonic": True,
+            },
+        },
+        # null, empty or missing data points flatten to nothing
+        {"name": "gauge_null", "gauge": {"dataPoints": None}},
+        {"name": "sum_empty", "sum": {"dataPoints": [], "aggregationTemporality": 1}},
+        {"name": "hist_null", "histogram": {"dataPoints": None}},
+        {"name": "exp_empty", "exponentialHistogram": {"dataPoints": []}},
+        {"name": "summary_bare", "summary": {}},
+        {"name": "no_type"},
+        # an exp histogram without bucket sides: both sides NULL, the
+        # scale and zero bucket default to 0
+        {
+            "name": "exp_bare",
+            "exponentialHistogram": {
+                "dataPoints": [dp(count=4, sum=2.0)],
+                "aggregationTemporality": 2,
+            },
+        },
+        # a histogram without buckets keeps count/sum and NULL buckets
+        {"name": "hist_bare", "histogram": {"dataPoints": [dp(count=3)]}},
+    ]
+    out = _flatten_payload(spark, {"resourceMetrics": [{
+        "resource": {"attributes": [_kv("service.name", s="svc-e")]},
+        "scopeMetrics": [{"metrics": metrics}],
+    }]})
+    rows = sorted(out.collect(), key=lambda r: (r.metric, r.metric_type))
+    got = [
+        (r.metric, r.metric_type, r.temporality, r.is_monotonic, r.value,
+         r["count"], r["sum"], r.buckets, r.exp_scale, r.exp_zero_count,
+         r.exp_zero_threshold, r.exp_positive_buckets,
+         r.exp_negative_buckets, r.attributes, r.exemplars, r.serviceName)
+        for r in rows
+    ]
+    attrs = {"service.name": "svc-e", "a": "x"}
+    assert got == [
+        ("dual", METRIC_TYPE_GAUGE, 0, False, 1.5, None, None, None, None,
+         None, None, None, None, attrs, [], "svc-e"),
+        ("dual", METRIC_TYPE_SUM, 1, True, 7.0, None, None, None, None,
+         None, None, None, None, attrs, [], "svc-e"),
+        ("exp_bare", METRIC_TYPE_EXP_HISTOGRAM, 1, False, None, 4, 2.0, None,
+         0, 0, 0.0, None, None, attrs, None, "svc-e"),
+        ("hist_bare", METRIC_TYPE_HISTOGRAM, 0, False, None, 3, None, None,
+         None, None, None, None, None, attrs, [], "svc-e"),
+    ]
+    assert rows[0].series_hash == rows[1].series_hash  # same identity
+
+
+def test_reads_its_source_once(spark, tmp_path):
+    """All five metric types come out of one scan of the source, with no
+    Union: a micro-batch reads and parses each request once."""
+    with open(tmp_path / "export.json", "w") as fh:
+        for _ in range(3):
+            fh.write(json.dumps(_request()) + "\n")
+    raw = spark.read.schema(OTLP_EXPORT_SCHEMA).json(str(tmp_path))
+    out = flatten_otlp(raw)
+    assert len(out.collect()) == 15
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan json") == 1, plan
+    assert "Union" not in plan, plan
