@@ -2,7 +2,7 @@
 # ships (reference Makefile:23-40 / scripts/run_tests.sh), minus the
 # docker/ClickHouse targets Spark makes unnecessary.
 
-.PHONY: help test test-unit test-full test-oracle test-oracle-types test-streaming bench scale-probe build-indexes demo-ingest loadgen serve clean
+.PHONY: help test test-unit test-full test-oracle test-oracle-types test-streaming perfbench-test bench scale-probe build-indexes demo-ingest loadgen serve clean
 
 SF_DIR ?= /root/testdata/sf0.01
 
@@ -29,6 +29,9 @@ test-oracle-types: ## Fast oracle output-type audit only (rejects HUGEINT column
 test-streaming: ## Streaming pipeline + OTLP ingest e2e only (the @slow tier)
 	python -m pytest tests/test_streaming.py tests/test_otlp_ingest_e2e.py tests/test_pipeline_e2e.py -x -q -m "slow or not slow"
 
+perfbench-test: ## The repo benchmark's own tests (perfbench/)
+	python3 -m pytest perfbench -q -p no:cacheprovider
+
 bench: ## Headline benchmark at sf0.1 (one JSON line on stdout)
 	python bench.py
 
@@ -48,4 +51,4 @@ serve: ## Full app: OTLP/HTTP receiver + streaming ingest + Remote Read endpoint
 	python scripts/serve.py
 
 clean: ## Remove local run artifacts
-	rm -rf /tmp/otlp-out /tmp/otlp-ckpt spark-warehouse .pytest_cache
+	rm -rf /tmp/otlp-out /tmp/otlp-ckpt spark-warehouse .pytest_cache .perfbench_work

@@ -11,6 +11,10 @@ Every knob set here is cluster-relevant, not local-only:
 - zstd parquet compression + v2 writer - mirrors the reference schema's
   ZSTD(1) column codecs (``internal/clickhouse/schema.sql:4-62``).
 - Arrow enabled for the pandas-UDF reference kernels.
+- Python worker daemon ``daemon_preload``: pandas/numpy/pyarrow are
+  imported once before the fork, and a worker's per-task
+  ``importlib.invalidate_caches()`` no longer re-reads ``pyspark.zip``
+  unless the archive changed (CPython < 3.12).
 """
 
 from __future__ import annotations

@@ -142,7 +142,9 @@ def _convert_group(
                 last_value = v
                 first = False
             elif mtype == METRIC_TYPE_HISTOGRAM:
-                c, s = r["count"], r["sum"]
+                # Arrow hands a null bigint/double to pandas as NaN
+                c = None if pd.isna(r["count"]) else r["count"]
+                s = None if pd.isna(r["sum"]) else r["sum"]
                 reset = (not first) and c is not None and c < last_count
                 if not first and not reset:
                     if c is not None and last_count > 0:
@@ -156,10 +158,10 @@ def _convert_group(
                             else cnt
                             for le, cnt in zip(r["buckets_le"], r["buckets_count"])
                         ]
-                if c is not None:
-                    last_count = c
-                if s is not None:
-                    last_sum = s
+                # a null count/sum is not differenced against, like the
+                # batch operator's lag over a null (0 fails the > 0 guards)
+                last_count = 0 if c is None else c
+                last_sum = 0.0 if s is None else s
                 if r["buckets_le"] is not None:
                     # state stores the raw cumulative buckets
                     raw = dict(zip(row.buckets_le, row.buckets_count))
@@ -197,9 +199,13 @@ def delta_convert_stream(df: DataFrame, state_ttl: bool = True) -> DataFrame:
     eviction (GroupStateTimeout.NoTimeout). With the default timeout
     every trigger runs a batch even without new data, so an AvailableNow
     query over this operator never terminates on its own. The timeout
-    mode is part of the state value schema: a checkpoint cannot be
-    restarted under the other ``state_ttl``
-    (``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``)."""
+    also costs a second Python pass per state partition on every
+    micro-batch: after the pass over the new rows, Spark calls the
+    Python runner again for the timed-out-group sweep, even when no
+    group has timed out, and each pass pays the worker's per-task set-up
+    (see ``daemon_preload``). The timeout mode is part of the state
+    value schema: a checkpoint cannot be restarted under the other
+    ``state_ttl`` (``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``)."""
     if state_ttl:
         fn, conf = _convert_group, GroupStateTimeout.ProcessingTimeTimeout
     else:

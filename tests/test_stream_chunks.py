@@ -305,7 +305,7 @@ def _hist_pdf_ragged(points):
                 "is_monotonic": False,
                 "value": None,
                 "count": c,
-                "sum": float(s),
+                "sum": None if s is None else float(s),
                 "buckets_le": None if les is None else list(les),
                 "buckets_count": None if bc is None else list(bc),
                 "attributes": {},
@@ -431,3 +431,51 @@ class TestConvertGroupHistogramProperty:
             assert st_.get[1] == last_c and st_.get[2] == float(last_s)
 
         run()
+
+
+class TestConvertGroupNullCountSum:
+    """A cumulative histogram point may arrive with no count or sum
+    (protojson omits zero-valued fields; validation keeps the point for
+    its buckets). Arrow hands the null to pandas as NaN. The null stays
+    null and the next point is not differenced against it, as in the
+    batch ``convert_to_delta`` (twin: test_temporality.py)."""
+
+    LADDER = [1.0, 5.0]
+    POINTS = [
+        (1, 10, 5.0, LADDER, [4, 10]),
+        (2, None, None, LADDER, [5, 12]),
+        (3, 15, 9.0, LADDER, [7, 15]),
+    ]
+
+    def _check(self, out):
+        pdf = pd.concat(out).sort_values("timestamp")
+        counts = [None if pd.isna(c) else int(c) for c in pdf["count"]]
+        sums = [None if pd.isna(s) else float(s) for s in pdf["sum"]]
+        assert counts == [10, None, 15]
+        assert sums == [5.0, None, 9.0]
+        assert [list(b) for b in pdf["buckets_count"]] == [
+            [4, 10], [1, 2], [2, 3]
+        ]
+
+    def test_one_batch(self):
+        st = _FakeState()
+        self._check(
+            list(
+                _convert_group(
+                    (2,), iter([_hist_pdf_ragged(self.POINTS)]), st, ttl_ms=None
+                )
+            )
+        )
+
+    def test_null_point_ends_a_batch(self):
+        # the null point is the last one its batch carries into state
+        st = _FakeState()
+        out = list(
+            _convert_group(
+                (2,), iter([_hist_pdf_ragged(self.POINTS[:2])]), st, ttl_ms=None
+            )
+        )
+        out += _convert_group(
+            (2,), iter([_hist_pdf_ragged(self.POINTS[2:])]), st, ttl_ms=None
+        )
+        self._check(out)

@@ -180,6 +180,24 @@ class TestConvertToDelta:
         got = {b["le"]: b["count"] for b in out[1]["buckets"]}
         assert got == {0.1: 15, 1.0: 30}
 
+    def test_histogram_null_count_and_sum(self, spark):
+        # a null count/sum stays null and the next point is not
+        # differenced against it; the streaming twin is
+        # test_stream_chunks.py::TestConvertGroupNullCountSum
+        ladder = [1.0, 5.0]
+        df = _mk(
+            spark,
+            [
+                _row(ts_min=0, mtype=METRIC_TYPE_HISTOGRAM, monotonic=False, count=10, total=5.0, buckets=list(zip(ladder, [4, 10]))),
+                _row(ts_min=1, mtype=METRIC_TYPE_HISTOGRAM, monotonic=False, buckets=list(zip(ladder, [5, 12]))),
+                _row(ts_min=2, mtype=METRIC_TYPE_HISTOGRAM, monotonic=False, count=15, total=9.0, buckets=list(zip(ladder, [7, 15]))),
+            ],
+        )
+        out = _values(convert_to_delta(df))
+        assert [r["count"] for r in out] == [10, None, 15]
+        assert [r["sum"] for r in out] == [5.0, None, 9.0]
+        assert [[b["count"] for b in r["buckets"]] for r in out] == [[4, 10], [1, 2], [2, 3]]
+
     def test_multiple_series_independent(self, spark):
         rows = [_row(series=1, ts_min=i, value=v) for i, v in enumerate([100.0, 150.0])]
         rows += [_row(series=2, ts_min=i, value=v) for i, v in enumerate([10.0, 30.0])]
