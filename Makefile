@@ -2,7 +2,7 @@
 # ships (reference Makefile:23-40 / scripts/run_tests.sh), minus the
 # docker/ClickHouse targets Spark makes unnecessary.
 
-.PHONY: help test test-unit test-full test-oracle test-oracle-types test-streaming perfbench-test bench scale-probe build-indexes demo-ingest loadgen serve clean
+.PHONY: help test test-unit test-full test-oracle test-oracle-types test-streaming perfbench-test perfbench-ab bench scale-probe build-indexes demo-ingest loadgen serve clean
 
 SF_DIR ?= /root/testdata/sf0.01
 
@@ -31,6 +31,11 @@ test-streaming: ## Streaming pipeline + OTLP ingest e2e only (the @slow tier)
 
 perfbench-test: ## The repo benchmark's own tests (perfbench/)
 	python3 -m pytest perfbench -q -p no:cacheprovider
+
+PAIRS ?= 10
+
+perfbench-ab: ## A/B the benchmark: PAIRS alternating runs of PARENT=<checkout> against this tree
+	python3 tools/ab_pairs.py --parent $(PARENT) --change . --pairs $(PAIRS)
 
 bench: ## Headline benchmark at sf0.1 (one JSON line on stdout)
 	python bench.py

@@ -13,53 +13,8 @@ plan-shape change (shuffles/aggregates identical).
 
 from __future__ import annotations
 
-import functools
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def memo_expr(fn):
-    """Memoize a kernel's COLUMN EXPRESSION construction (r11
-    optimization, guide §1.2 step 2 — but for the driver side).
-
-    Building the big HOF kernels costs thousands of py4j round trips —
-    measured 0.3-0.9 s of pure plan construction per bench invocation
-    (e.g. hist_percentile_events: fn()=0.907 s before any action).
-    Unresolved Column expressions are immutable and attribute-resolved
-    per plan, so one instance is safely shared across DataFrames and
-    queries; memoizing by the (hashable) argument tuple makes repeat
-    constructions free.
-
-    This caches the EXPRESSION TREE only — never data, never results:
-    every action still computes from the parquet inputs. Calls with a
-    live Column argument (unhashable) fall through uncached. Sessions
-    share one JVM per process, so cached JVM expression handles stay
-    valid across SparkSession restarts — but NOT across a py4j gateway
-    restart (r11 ADVICE): a cached handle into a dead JVM fails with
-    an opaque py4j error far from the cause, so the cache key carries
-    the gateway identity and a fresh gateway rebuilds its expressions."""
-    cache: dict = {}
-
-    @functools.wraps(fn)
-    def wrapper(*args, **kwargs):
-        from pyspark import SparkContext
-
-        key = (
-            id(SparkContext._gateway),
-            args,
-            tuple(sorted(kwargs.items())),
-        )
-        try:
-            hash(key)
-        except TypeError:
-            return fn(*args, **kwargs)
-        if key not in cache:
-            cache[key] = fn(*args, **kwargs)
-        return cache[key]
-
-    wrapper.__wrapped__ = fn
-    return wrapper
 
 
 def packed_ts_order(ts: Column | str, tiebreak: Column | str) -> Column:

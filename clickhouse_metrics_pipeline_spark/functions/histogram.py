@@ -64,7 +64,7 @@ def _sorted_buckets(buckets: Column | str) -> Column:
 # per element — O(k² log k) interpreted work per row (visible as ~12
 # repeated ``array_sort``/``aggregate`` copies in the percentile plans,
 # e.g. plans/r11/promql_rate_bucket_p95_before.txt node 22).
-from clickhouse_metrics_pipeline_spark.functions.expr import memo_expr
+from clickhouse_metrics_pipeline_spark.plan_memo import memo_expr
 from clickhouse_metrics_pipeline_spark.functions.expr import row_let as _let
 
 

@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from clickhouse_metrics_pipeline_spark.functions.expr import memo_expr
+from clickhouse_metrics_pipeline_spark.plan_memo import memo_expr
 
 
 def rate_over_window(
@@ -57,12 +57,8 @@ def rate_over_window(
     """
     if mode not in ("rate", "increase"):
         raise ValueError(f"mode must be rate|increase, got {mode!r}")
-    # r11 optimization (guide §1.2 step 2, driver side): the kernel's
-    # expression construction alone measured ~0.27 s of py4j round
-    # trips per invocation (bench pays it cold AND each warm run).
-    # Every expression depends only on the hashable argument tuple, so
-    # one constructed set is shared across invocations via memo_expr —
-    # expression trees only, never data or results.
+    # the expressions depend only on the hashable arguments: built once
+    # (memo_expr, plan_memo.py), ~0.27 s of py4j round trips otherwise
     sel, win_exprs, aggs, final = _kernel_exprs(
         tuple(series_cols),
         tuple(window_cols) if window_cols is not None else None,
@@ -170,7 +166,4 @@ def _kernel_exprs(
             (F.col("n_samples") >= 2) & (sampled > 0), F.round(val, 6)
         ).alias("rate"),
     ]
-    # tuples, not lists (r11 ADVICE): memo_expr hands the SAME objects
-    # to every later caller; a caller appending to a returned list
-    # would silently corrupt all subsequent invocations with this key
     return tuple(sel), tuple(win_exprs), tuple(aggs), tuple(final)

@@ -10,7 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from clickhouse_metrics_pipeline_spark.functions.expr import memo_expr, row_let
+from clickhouse_metrics_pipeline_spark.functions.expr import row_let
+from clickhouse_metrics_pipeline_spark.plan_memo import memo_expr
 from clickhouse_metrics_pipeline_spark.operators.dedup import normalize_text, tokens
 
 # r11 optimization note (guide §1.2 step 2): every kernel here that

@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from clickhouse_metrics_pipeline_spark.functions.expr import memo_expr
+from clickhouse_metrics_pipeline_spark.plan_memo import memo_expr
 
 _P = 2_147_483_647  # Mersenne prime 2^31-1
 _rng = random.Random(42)

@@ -33,6 +33,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from clickhouse_metrics_pipeline_spark.schema import METRICS_1M_SCHEMA
 
 GROUP_KEY = [
     "workspaceId",
@@ -192,6 +195,13 @@ def _partition_dates(spark, path: str) -> set[str]:
     }
 
 
+# what incremental_rollup_job stores at every grain, partition column
+# last; serving reads the stored tables with it
+ROLLUP_STORED_SCHEMA = T.StructType(
+    [*METRICS_1M_SCHEMA.fields, T.StructField("date", T.DateType())]
+)
+
+
 def incremental_rollup_job(
     spark,
     raw_path: str,
@@ -234,7 +244,9 @@ def incremental_rollup_job(
     raw = spark.read.parquet(raw_path).where(F.col("date").isin(todo))
     if adapt is not None:
         raw = adapt(raw)
-    out = rollup_raw_to_1m(raw, grain).withColumn("date", F.to_date("timestamp"))
+    out = rollup_raw_to_1m(raw, grain).withColumn(
+        "date", F.to_date("timestamp")
+    ).select(*ROLLUP_STORED_SCHEMA.fieldNames())
     key = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(key)
     spark.conf.set(key, "dynamic")

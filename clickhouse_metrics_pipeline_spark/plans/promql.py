@@ -385,7 +385,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from clickhouse_metrics_pipeline_spark.functions.expr import memo_expr
+from clickhouse_metrics_pipeline_spark import plan_memo
+from clickhouse_metrics_pipeline_spark.plan_memo import memo_expr
 from clickhouse_metrics_pipeline_spark.functions.histogram import (
     _floordiv_exact,
 )
@@ -1857,25 +1858,10 @@ def parse_selector(text: str) -> tuple[str, tuple[LabelMatcher, ...]]:
     return metric, tuple(matchers)
 
 
-# r12 optimization (guide §1.2 step 2, driver side): constructing the
-# series frame (three projected columns incl. the unrolled static
-# series key) costs ~60-130 ms of py4j round trips per call, and every
-# promql workload invocation rebuilt it over the SAME (memoized) input
-# frame. Keyed by the input DataFrame's identity — tables._t returns
-# one stable object per (session, dir, table), so repeat invocations
-# hit; a fresh input frame builds fresh. Plans only, never data.
-_SERIES_MEMO: dict = {}
-_SERIES_MEMO_CAP = 128
-
-
 def events_as_series(events: DataFrame) -> DataFrame:
-    cached = _SERIES_MEMO.get(events)
-    if cached is None:
-        cached = _events_as_series_uncached(events)
-        if len(_SERIES_MEMO) >= _SERIES_MEMO_CAP:
-            _SERIES_MEMO.clear()
-        _SERIES_MEMO[events] = cached
-    return cached
+    return plan_memo.memo(
+        ("series", events), lambda: _events_as_series_uncached(events)
+    )
 
 
 def _events_as_series_uncached(events: DataFrame) -> DataFrame:
@@ -2050,25 +2036,13 @@ def _bucket_pairs_col(df: DataFrame):
 
 
 # Dispatch probes run bounded jobs over the DATA during plan
-# construction — the routing they decide is data-dependent and must
-# be RE-DERIVED from the data on every invocation (caching the
-# decision would be result caching). The compile memo therefore
-# records, for each cached plan, the exact probes its construction
-# ran (as zero-arg replay closures) together with their results; a
-# memo hit REPLAYS every probe job first and only serves the cached
-# expression tree when the live data answers exactly as recorded —
-# otherwise it falls back to a full rebuild. Construction is cached;
-# the data-dependent jobs run every time.
+# construction; a compile-memo hit replays them (plan_memo.py).
 _PROBES_RUN = [0]
-_PROBE_TRACE: list = []  # (replay_closure, recorded_result)
 _REPLAYS_RUN = [0]
 
 
 def _record_probe(run) -> bool:
-    result = run()
-    _PROBES_RUN[0] += 1
-    _PROBE_TRACE.append((run, result))
-    return result
+    return plan_memo.record_probe(run, _PROBES_RUN)
 
 
 def _pairs_presence_probe(df: DataFrame, pairs: Column) -> bool:
@@ -2196,6 +2170,14 @@ def _stored_bucket_rate_quantile_plan(
     )
 
 
+def _le_key(le: Column) -> tuple[Column, Column]:
+    """``le`` with -0.0 folded into 0.0, and a string key ``_lek`` that
+    groups exactly as a double grouping key does (-0.0 with 0.0, NaN
+    with NaN): Java's double-to-string is injective."""
+    norm = F.when(le == 0.0, F.lit(0.0)).otherwise(le)
+    return norm.cast("string").alias("_lek"), norm.alias("le")
+
+
 def _stored_bucket_rate_merged(
     q: PromQuery, df: DataFrame, pairs
 ) -> DataFrame:
@@ -2305,17 +2287,22 @@ def _stored_bucket_rate_merged(
                 "_sk",
                 "ts",
                 "_tb",
-                F.col("b.le").alias("le"),
+                *_le_key(F.col("b.le")),
                 F.col("b.count").cast("double").alias("_cum"),
             )
         )
+        # the Window and its aggregate partition on the string key
+        # ``_lek``, not the double ``le``: Catalyst wraps a floating
+        # Window key in NaN/-0.0 normalization, which the aggregate's
+        # bare ``le`` does not match, so it shuffled a second time
         rated = rate_over_window(
             exploded,
-            [*q.by, "_sk", "le"],
+            [*q.by, "_sk", "_lek", "le"],
             q.range_s,
             value_col="_cum",
             tiebreak_col="_tb",
             mode=mode,
+            window_cols=[*q.by, "_sk", "_lek"],
         )
         per_le = (
             rated.where(F.col("rate").isNotNull())
@@ -2700,10 +2687,7 @@ def _exp_rate_cols(by: tuple, has_sid: bool, has_sk: bool) -> dict:
             F.when(F.col("sign") == 0, F.col("count")).otherwise(0)
         ).alias("exp_zero_count"),
     ]
-    # read-only containers (r11 ADVICE): memo_expr returns the SAME
-    # object to every later caller — a mutated list/dict would silently
-    # corrupt all of them. Tuples + MappingProxyType make that a
-    # TypeError at the mutation site instead.
+    # read-only containers: memo_expr shares them (plan_memo.py)
     import types
 
     return types.MappingProxyType({
@@ -3782,68 +3766,33 @@ def _bin_plan(b: BinQuery, series: DataFrame) -> DataFrame:
     return j.select(*out_cols, val.cast("bigint").alias("value"))
 
 
-# r12 optimization (guide §1.2 step 2, driver side — the r11 verdict's
-# top item): compile_promql's plan construction measured 0.15-0.5 s of
-# py4j round trips per invocation on top of the frame build, taxing
-# all ~40 promql catalog rows every cold AND warm bench run. The memo
-# caches the compiled DataFrame — an unresolved logical PLAN, never
-# rows or results; every action on it still computes from the parquet
-# inputs — keyed by (py4j gateway identity, the query text/AST, the
-# series frame's object identity). Data-dependent dispatch probes are
-# NEVER skipped: each cached entry records the probes its construction
-# ran, and a memo hit re-runs every one of those jobs against the live
-# data first (see the _PROBE_TRACE block above) — an answer differing
-# from the recorded routing forces a full rebuild. The gateway id keys
-# out a restarted JVM (r11 ADVICE).
-_PLAN_MEMO: dict = {}
-_PLAN_MEMO_CAP = 512
-
-
 def compile_promql(
     query: str | PromQuery | BinQuery, series: DataFrame
 ) -> DataFrame:
     """Compile the parsed query onto a series frame. Output columns:
     the by-labels (or ``labels`` map for unaggregated calls),
     ``bucket_ts``, and ``value`` (BIGINT; see the exactness contract
-    in the module docstring)."""
-    from pyspark import SparkContext
-
+    in the module docstring). Memoized (plan_memo.py) by the query
+    and the series frame object."""
+    # the array-kernel conf picks the plan at construction: part of the key
+    kernel = series.sparkSession.conf.get(
+        "spark.cmp.bucketRate.arrayKernel", "false"
+    )
     try:
-        key = (id(SparkContext._gateway), query, series)
+        key = ("promql", query, kernel, series)
         hash(key)
     except TypeError:
         return _compile_promql_uncached(query, series)
-    cached = _PLAN_MEMO.get(key)
+    cached = plan_memo.get(key)
     if cached is not None:
         trace, out = cached
-        # every recorded probe re-runs against the live data — the
-        # routing decision is re-derived per invocation, never cached
-        _REPLAYS_RUN[0] += len(trace)
-        if all(run() == expected for run, expected in trace):
-            # a FRESH Dataset over the cached logical plan, never the
-            # same object: re-executing one Dataset lets AQE reuse its
-            # already-materialized shuffle stages, which would make
-            # warm bench runs skip recomputation (result reuse).
-            # select("*") gives every call its own QueryExecution —
-            # optimization, AQE and every scan/shuffle run from
-            # scratch on each action.
+        if plan_memo.replay(trace, _REPLAYS_RUN):
             return out.select("*")
-        del _PLAN_MEMO[key]
-    mark = len(_PROBE_TRACE)
-    replays_before = _REPLAYS_RUN[0]
-    out = _compile_promql_uncached(query, series)
-    trace = tuple(_PROBE_TRACE[mark:])
-    del _PROBE_TRACE[mark:]
-    # a nested memo HIT during this construction replayed its own
-    # probes without re-recording them here; caching this outer plan
-    # would let a later outer hit skip those inner jobs — leave such
-    # constructions uncached (no graded query nests probed plans, so
-    # this is a correctness guard, not a hot path)
-    if _REPLAYS_RUN[0] == replays_before:
-        if len(_PLAN_MEMO) >= _PLAN_MEMO_CAP:
-            _PLAN_MEMO.clear()
-        _PLAN_MEMO[key] = (trace, out)
-    return out
+    out, trace = plan_memo.traced(
+        lambda: _compile_promql_uncached(query, series)
+    )
+    plan_memo.put(key, (trace, out))
+    return out.select("*")  # the memo's copy is never executed
 
 
 def _compile_promql_uncached(

@@ -68,7 +68,9 @@ Usage::
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import urllib.parse
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -227,21 +229,23 @@ def clip_series_input(
     (<= 1 + ceil(log4(parts)) jobs; 4 total for the worst-case
     two-negative-probe gauge request against a 1-day clip), no longer
     a full-history read."""
+    has_date = "date" in df.columns
+    conds = []
     if lo_s is not None:
-        df = df.where(F.col("ts") >= F.timestamp_seconds(F.lit(lo_s)))
-        if "date" in df.columns:
-            df = df.where(
-                F.col("date")
-                >= F.to_date(F.timestamp_seconds(F.lit(lo_s)))
-            )
+        lo = F.timestamp_seconds(F.lit(lo_s))
+        conds.append(F.col("ts") >= lo)
+        if has_date:
+            conds.append(F.col("date") >= F.to_date(lo))
     if hi_s is not None:
-        df = df.where(F.col("ts") <= F.timestamp_seconds(F.lit(hi_s)))
-        if "date" in df.columns:
-            df = df.where(
-                F.col("date")
-                <= F.to_date(F.timestamp_seconds(F.lit(hi_s)))
-            )
-    return df
+        hi = F.timestamp_seconds(F.lit(hi_s))
+        conds.append(F.col("ts") <= hi)
+        if has_date:
+            conds.append(F.col("date") <= F.to_date(hi))
+    if not conds:
+        return df
+    # one where call: each call is analyzed on its own (27-41 ms a
+    # request)
+    return df.where(functools.reduce(operator.and_, conds))
 
 
 def clip_time_range(

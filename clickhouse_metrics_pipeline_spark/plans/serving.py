@@ -34,7 +34,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
+from clickhouse_metrics_pipeline_spark.operators.rollup import (
+    ROLLUP_STORED_SCHEMA,
+)
 from clickhouse_metrics_pipeline_spark.plans.router import select_resolution
+from clickhouse_metrics_pipeline_spark.streaming.pipeline import (
+    SINK_STORED_SCHEMA,
+)
 
 _SERIES_FRAME_COLS = ("metric", "attributes", "ts", "value")
 
@@ -122,6 +128,17 @@ def serving_resolution(
     )
 
 
+def read_stored(spark, path: str | None, schema) -> DataFrame | None:
+    """The stored table under ``path``, read with its declared
+    ``schema`` (no Spark job infers one from the parquet footers); None
+    when the dir is absent or holds no committed data file yet. A
+    failure to list the dir raises."""
+    if not path or not os.path.isdir(path):
+        return None
+    df = spark.read.schema(schema).parquet(path)
+    return df if df.inputFiles() else None
+
+
 def stored_rollup_reader(spark, paths: dict[str, str]):
     """Loader for :func:`routed_series_frame`'s ``stored`` hook over
     materialized rollup parquet dirs (the incremental job's or the
@@ -129,19 +146,10 @@ def stored_rollup_reader(spark, paths: dict[str, str]):
 
     Returns ``table_name -> DataFrame | None``: ``None`` when the dir
     is absent or holds no committed data yet (the caller derives
-    on demand), raising on genuine storage failures so they surface as
-    500s rather than silently recomputing from raw."""
+    on demand)."""
 
     def _get(table: str) -> DataFrame | None:
-        path = paths.get(table)
-        if not path or not os.path.isdir(path):
-            return None
-        try:
-            return spark.read.parquet(path)
-        except Exception as exc:  # noqa: BLE001 — classified below
-            if is_empty_storage_error(exc):
-                return None
-            raise
+        return read_stored(spark, paths.get(table), ROLLUP_STORED_SCHEMA)
 
     return _get
 
@@ -225,7 +233,9 @@ class StoredFirstCatalog:
             rolled = self._stored(name)
             if rolled is not None:
                 return rolled
-        raw = self._spark.read.parquet(self._raw_path)
+        raw = read_stored(self._spark, self._raw_path, SINK_STORED_SCHEMA)
+        if raw is None:
+            raise KeyError(f"table {name} not available yet")
         if name == "metrics_raw":
             return raw
         from clickhouse_metrics_pipeline_spark.operators.rollup import (

@@ -91,9 +91,11 @@ METRICS_RAW_SCHEMA = T.StructType(
 )
 
 # Rollup tables: value -> value_min/max/avg/last + samples_count
-# (schema.sql:102-105, 131). exp_* columns kept only in 1m (schema.sql:172-178).
-def _rollup_schema(with_exp: bool) -> T.StructType:
-    fields = [
+# (schema.sql:102-105, 131). The reference keeps the exp_* columns only
+# in 1m (schema.sql:172-178); operators.rollup.incremental_rollup_job
+# stores them at every grain, so this one shape serves 1m, 5m and 1h.
+METRICS_1M_SCHEMA = T.StructType(
+    [
         T.StructField("workspaceId", T.StringType(), False),
         T.StructField("series_hash", T.LongType(), False),
         T.StructField("metric", T.StringType(), False),
@@ -109,25 +111,15 @@ def _rollup_schema(with_exp: bool) -> T.StructType:
         T.StructField("count", T.LongType(), True),
         T.StructField("sum", T.DoubleType(), True),
         T.StructField("buckets", BUCKET_TYPE, True),
-    ]
-    if with_exp:
-        fields += [
-            T.StructField("exp_scale", T.IntegerType(), True),
-            T.StructField("exp_zero_count", T.LongType(), True),
-            T.StructField("exp_zero_threshold", T.DoubleType(), True),
-            T.StructField("exp_positive_buckets", EXP_BUCKET_TYPE, True),
-            T.StructField("exp_negative_buckets", EXP_BUCKET_TYPE, True),
-        ]
-    fields += [
+        T.StructField("exp_scale", T.IntegerType(), True),
+        T.StructField("exp_zero_count", T.LongType(), True),
+        T.StructField("exp_zero_threshold", T.DoubleType(), True),
+        T.StructField("exp_positive_buckets", EXP_BUCKET_TYPE, True),
+        T.StructField("exp_negative_buckets", EXP_BUCKET_TYPE, True),
         T.StructField("attributes", T.MapType(T.StringType(), T.StringType()), True),
         T.StructField("samples_count", T.LongType(), False),
     ]
-    return T.StructType(fields)
-
-
-METRICS_1M_SCHEMA = _rollup_schema(with_exp=True)
-METRICS_5M_SCHEMA = _rollup_schema(with_exp=False)
-METRICS_1H_SCHEMA = _rollup_schema(with_exp=False)
+)
 
 # Retention ladder (schema.sql:63,133,237,328; README.md:17-21)
 RETENTION = {

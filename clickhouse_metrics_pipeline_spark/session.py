@@ -15,6 +15,20 @@ Every knob set here is cluster-relevant, not local-only:
   imported once before the fork, and a worker's per-task
   ``importlib.invalidate_caches()`` no longer re-reads ``pyspark.zip``
   unless the archive changed (CPython < 3.12).
+- Code-generation cache of 200 classes
+  (``spark.sql.codegen.cache.maxEntries``; Spark's default is 100).
+  Serving re-runs the same few plans, and a class that has been evicted
+  from this cache is compiled by Janino again. One refresh of the
+  benchmark's dashboard (5 PromQL panels, a series call and a Remote
+  Read) uses 160-180 classes: with 100 entries every refresh compiled
+  about 132 of them again; with 140 entries about 50, with 160 up to
+  25, and with 180, 200 or 400 only the 4-6 whose code differs per
+  request (``tools/codegen_probe.py --cache-entries N``). 200 covers
+  that working set with a margin. A range that slides with ``now``
+  changes the literals of about 16 of them per refresh
+  (``--slide-s 60``); the rest still hit. The cache is built when the
+  JVM first generates code, so the setting takes effect only for the
+  JVM this builder launches.
 """
 
 from __future__ import annotations
@@ -69,6 +83,7 @@ def get_spark(
             "spark.python.daemon.module",
             "clickhouse_metrics_pipeline_spark.daemon_preload",
         )
+        .config("spark.sql.codegen.cache.maxEntries", "200")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")

@@ -92,6 +92,12 @@ _OUTPUT_SCHEMA = (
     "buckets_le array<double>, buckets_count array<bigint>, "
     f"attributes map<string,string>, exemplars {_EXEMPLARS_DDL}"
 )
+# the ingest sink's partition columns, in directory order, and the
+# stored table with them, which serving reads it with
+_SINK_PARTITIONS = {"date": "date", "batch": "int"}
+SINK_STORED_SCHEMA = _OUTPUT_SCHEMA + "".join(
+    f", {c} {t}" for c, t in _SINK_PARTITIONS.items()
+)
 
 
 def _convert_group(
@@ -1021,11 +1027,15 @@ def ingest_stream(
                 defer_batch_geq=batch_id,
             )
         (
-            batch_df.withColumn("date", F.to_date("timestamp"))
-            .withColumn("batch", F.lit(batch_id))
+            batch_df.withColumn(
+                "date", F.to_date("timestamp").cast(_SINK_PARTITIONS["date"])
+            )
+            .withColumn(
+                "batch", F.lit(batch_id).cast(_SINK_PARTITIONS["batch"])
+            )
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("date", "batch")
+            .partitionBy(*_SINK_PARTITIONS)
             .parquet(out_path)
         )
 

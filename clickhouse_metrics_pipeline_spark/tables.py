@@ -7,85 +7,49 @@ import order.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clickhouse_metrics_pipeline_spark import plan_memo
 
-# r12 optimization (guide §1.2 step 2, driver side): ``spark.read
-# .parquet`` costs 100-300 ms of driver work PER CALL (file listing,
-# footer schema inference, py4j round trips) and every workload
-# invocation paid it again for the same immutable input table. The
-# memo below caches the constructed DataFrame — an analyzed logical
-# PLAN over the parquet relation, never rows or results: every action
-# on it still scans the parquet files. Keyed by the live SparkSession
-# object (a restarted session builds fresh plans; stale entries of a
-# stopped session can never be reached because the key holds the old
-# session). The input dirs this loader serves are the driver's
-# read-only test-data directories, so a cached file listing cannot go
-# stale; workloads that write-and-re-read intermediates use their own
-# tempdirs and never pass through here.
-_FRAME_MEMO: dict = {}
+# memoized plans (plan_memo.py) over the read-only test-data dirs;
+# workloads that write and re-read intermediates never pass through here
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (spark, sf_dir, name)
-    df = _FRAME_MEMO.get(key)
-    if df is None:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        _FRAME_MEMO[key] = df
-    return df
+    return plan_memo.memo(
+        ("table", spark, sf_dir, name),
+        lambda: spark.read.parquet(f"{sf_dir}/{name}.parquet"),
+    )
 
 
 def workload_plan_memo(fn):
-    """Memoize a PURE ``(spark, sf_dir) -> DataFrame`` workload's plan
-    construction. Differs from :func:`frame_memo` in one crucial way:
-    the memoized DataFrame is the object the bench EXECUTES directly,
-    so a hit returns ``cached.select("*")`` — a fresh Dataset over the
-    cached logical plan — never the same object (re-executing one
-    Dataset would let AQE reuse its already-materialized shuffle
-    stages across runs, i.e. warm runs would skip recomputation).
-    Only for workloads whose construction has NO side effects and NO
-    data-dependent decisions (audited: the 22 TPC-H plan builders);
-    workloads that write intermediates (events_rollup_incremental) or
-    train in-session models (IVF/PQ) must never be wrapped."""
-    import functools
+    """Memoize a PURE ``(spark, sf_dir) -> DataFrame`` workload's plan;
+    a hit is a fresh Dataset. Only for builders with NO side effects and
+    NO data-dependent decisions (audited: the 22 TPC-H builders)."""
 
     @functools.wraps(fn)
     def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = (
-            spark,
-            sf_dir,
-            "workload:" + fn.__module__ + "." + fn.__qualname__,
-        )
-        df = _FRAME_MEMO.get(key)
-        if df is None:
-            df = fn(spark, sf_dir)
-            _FRAME_MEMO[key] = df
-        return df.select("*")
+        return plan_memo.memo(
+            ("workload", spark, sf_dir, fn), lambda: fn(spark, sf_dir)
+        ).select("*")
 
-    wrapper.__wrapped__ = fn
     return wrapper
 
 
 def frame_memo(fn):
     """Memoize a ``(spark, sf_dir) -> DataFrame`` frame BUILDER by
-    (session, dir): the constructed logical plan is cached, never rows
-    — every action on the returned frame still computes from parquet.
-    For the promql series-frame builders this removes 60-200 ms of
-    per-invocation py4j construction on top of the `_t` read memo
-    (same r12 rationale as the header comment above)."""
-    import functools
+    (session, dir); callers build further plans on the frame, so a hit
+    returns the same object."""
 
     @functools.wraps(fn)
     def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = (spark, sf_dir, fn.__module__ + "." + fn.__qualname__)
-        df = _FRAME_MEMO.get(key)
-        if df is None:
-            df = fn(spark, sf_dir)
-            _FRAME_MEMO[key] = df
-        return df
+        return plan_memo.memo(
+            ("frame", spark, sf_dir, fn), lambda: fn(spark, sf_dir)
+        )
 
-    wrapper.__wrapped__ = fn
     return wrapper
 
 
@@ -95,21 +59,21 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     The driver's events.parquet stores TIMESTAMP(NANOS); Spark reads it as
     bigint nanos (legacy.parquet.nanosAsLong) - truncate to micros, same
     flooring DuckDB applies when surfacing ns timestamps to clients."""
-    key = (spark, sf_dir, "events#ts-normalized")
-    cached = _FRAME_MEMO.get(key)
-    if cached is not None:
-        return cached
-    ev = _t(spark, sf_dir, "events")
-    dt = dict(ev.dtypes)["ts"]
-    if dt == "bigint":
-        # integer `div`, NOT `/`: float division loses ULPs at 1e18 nanos
-        ev = ev.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    elif dt == "timestamp_ntz":
-        # micros-precision files read as NTZ; session tz is pinned UTC so
-        # this cast is value-identity - gives every sf the same ts type
-        ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-    _FRAME_MEMO[key] = ev
-    return ev
+
+    def build() -> DataFrame:
+        ev = _t(spark, sf_dir, "events")
+        dt = dict(ev.dtypes)["ts"]
+        if dt == "bigint":
+            # integer `div`, NOT `/`: float division loses ULPs at 1e18
+            ev = ev.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+        elif dt == "timestamp_ntz":
+            # micros-precision files read as NTZ; session tz is pinned
+            # UTC so this cast is value-identity - gives every sf the
+            # same ts type
+            ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
+        return ev
+
+    return plan_memo.memo(("events", spark, sf_dir), build)
 
 
 def value_cents(col="value"):

@@ -1688,15 +1688,9 @@ QUERIES.update(EXTRA11_QUERIES)
 ORACLE_SQL.update(EXTRA11_ORACLE)
 
 # --------------------------------------------------------------------------
-# r12: plan-construction memo for the audited-pure TPC-H workloads
+# plan memo for the audited construction-pure TPC-H builders (no
+# collects, writes, counts or trained state; 50-150 ms of py4j a call)
 # --------------------------------------------------------------------------
-# Each invocation rebuilt the same multi-join plan from scratch —
-# 50-150 ms of py4j round trips per call on top of the _t read memo.
-# These 22 builders are construction-pure (no collects, writes,
-# counts, or trained state — audited), so their LOGICAL PLAN is
-# cached per (session, sf_dir); a hit returns a fresh Dataset (see
-# tables.workload_plan_memo for why never the same object). Workloads
-# with construction side effects stay unwrapped by design.
 from clickhouse_metrics_pipeline_spark.tables import (  # noqa: E402
     workload_plan_memo as _wpm,
 )

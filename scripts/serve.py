@@ -72,9 +72,11 @@ def main() -> None:
     spark.sparkContext.setLogLevel("WARN")
 
     from clickhouse_metrics_pipeline_spark.plans.serving import (
+        SINK_STORED_SCHEMA,
         StoredFirstCatalog,
         as_metrics_raw,
         is_empty_storage_error,
+        read_stored,
         routed_series_frame,
         stored_rollup_reader,
     )
@@ -113,29 +115,18 @@ def main() -> None:
         # at the Q1-router-chosen resolution for the request's
         # [start, end] span (r8 verdict item 5: a >24h Grafana span
         # reads metrics_1h, not a raw scan — same routing Remote Read
-        # gets from StoredFirstCatalog above). Before the first micro-batch
-        # COMMITS the output dir either doesn't exist or holds only
-        # _spark_metadata with zero data files (schema inference
-        # raises): both serve an EMPTY series frame so clients get
-        # Prometheus's "success, no data" matrix instead of a 500.
-        # Only THAT error class is swallowed — corrupt files or
-        # permission errors propagate to the handler's 500 path
-        # (r8 ADVICE item).
-        def _empty():
+        # gets from StoredFirstCatalog above). Before the first
+        # micro-batch COMMITS the output dir either doesn't exist or
+        # holds no data file: both serve an EMPTY series frame so
+        # clients get Prometheus's "success, no data" matrix instead of
+        # a 500.
+        raw = read_stored(spark, out, SINK_STORED_SCHEMA)
+        if raw is None:
             return spark.createDataFrame(
                 [],
                 "metric string, attributes map<string,string>, "
                 "ts timestamp, value double",
             )
-
-        if not os.path.isdir(out):
-            return _empty()
-        try:
-            raw = spark.read.parquet(out)
-        except Exception as exc:
-            if is_empty_storage_error(exc):
-                return _empty()
-            raise
         return routed_series_frame(raw, start_s, end_s, stored=stored)
 
     promql_srv = make_promql_server(_series_frame, port=args.promql_port)

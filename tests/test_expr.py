@@ -1,4 +1,4 @@
-"""Pins for the r11 expression helpers (functions/expr.py):
+"""Pins for the expression helpers (functions/expr.py, plan_memo.py):
 
 - ``row_let`` — row-local let binding: same values as the unbound form.
 - ``packed_ts_order`` — the DECIMAL(38,0) packing of the (ts, id) total
@@ -16,10 +16,10 @@ import datetime
 from pyspark.sql import functions as F
 
 from clickhouse_metrics_pipeline_spark.functions.expr import (
-    memo_expr,
     packed_ts_order,
     row_let,
 )
+from clickhouse_metrics_pipeline_spark.plan_memo import memo_expr
 
 
 def test_row_let_matches_unbound_form(spark):

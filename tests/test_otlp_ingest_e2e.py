@@ -18,7 +18,10 @@ import pytest
 
 from clickhouse_metrics_pipeline_spark.functions.histogram import bucket_percentile
 from clickhouse_metrics_pipeline_spark.sources.otlp import otlp_json_stream
-from clickhouse_metrics_pipeline_spark.streaming.pipeline import ingest_stream
+from clickhouse_metrics_pipeline_spark.streaming.pipeline import (
+    SINK_STORED_SCHEMA,
+    ingest_stream,
+)
 
 _NOW_NS = (int(time.time()) - 120) * 1_000_000_000  # 2 min ago: inside the
 # validation window (now-7d .. now+24h); whole seconds so timestamps are exact
@@ -97,6 +100,24 @@ def _export_request():
         "resource": {"attributes": res_attrs},
         "scopeMetrics": [{"metrics": [gauge, counter, hist]}],
     }]}
+
+
+def test_sink_has_the_declared_schema(spark, tmp_path):
+    # serving reads the sink with SINK_STORED_SCHEMA instead of
+    # inferring it: what ingest writes must read back as exactly that
+    # (nullability aside: a parquet read makes every column nullable)
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    (drop / "export-0001.json").write_text(json.dumps(_export_request()) + "\n")
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    _drain(ingest_stream(otlp_json_stream(spark, str(drop)), out, ckpt,
+                         available_now=True))
+
+    def shape(schema):
+        return [(f.name, f.dataType.simpleString()) for f in schema]
+
+    declared = spark.createDataFrame([], SINK_STORED_SCHEMA).schema
+    assert shape(spark.read.parquet(out).schema) == shape(declared)
 
 
 @pytest.mark.slow  # r12: excluded from the driver-completable fast gate (make test-full runs it)

@@ -807,6 +807,15 @@ class TestPreCompileInputClip:
             for t in got_ts
         )
 
+    def test_clip_is_one_filter(self, dated_store):
+        raw, t0 = dated_store
+        frame = clip_series_input(
+            raw.withColumnRenamed("timestamp", "ts"),
+            t0.timestamp(), (t0 + dt.timedelta(days=1)).timestamp(),
+        )
+        plan = frame._jdf.queryExecution().analyzed().toString()
+        assert plan.count("Filter") == 1 and plan.count("date") >= 2
+
     def test_negative_probe_request_answers_from_ladder(
         self, spark, dated_store
     ):

@@ -635,6 +635,24 @@ class TestSubqueries:
         assert kept == {k: v for k, v in base.items() if v > 5} and kept
 
 
+def test_bucket_rate_kernel_shuffles_once_per_grouping(spark):
+    """The exploded stored-bucket rate plan has three exchanges: the
+    rate kernel's Window and its aggregate share one, then the per-le
+    sum and the bucket merge take one each. The Window keyed on the
+    double ``le`` took a second exchange for the kernel's aggregate."""
+    from clickhouse_metrics_pipeline_spark.workloads_ext10 import (
+        _cum_bucket_series_frame,
+    )
+    from clickhouse_metrics_pipeline_spark.plans.promql import (
+        compile_promql,
+    )
+
+    q = "histogram_quantile(0.95, sum by (event_type) (rate(hist_requests[1d])))"
+    df = compile_promql(q, _cum_bucket_series_frame(spark, SF))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 3
+
+
 def test_bucket_rate_array_kernel_matches_exploded(spark):
     """r12: the conf-gated ARRAY-form stored-bucket rate kernel must
     produce byte-identical results to the default exploded form — the
@@ -669,3 +687,4 @@ def test_bucket_rate_array_kernel_matches_exploded(spark):
     finally:
         spark.conf.unset("spark.cmp.bucketRate.arrayKernel")
     assert arr == exploded and exploded
+

@@ -10,6 +10,9 @@ import datetime as dt
 
 import pytest
 
+from clickhouse_metrics_pipeline_spark.operators.rollup import (
+    ROLLUP_STORED_SCHEMA,
+)
 from clickhouse_metrics_pipeline_spark.plans.serving import (
     as_metrics_raw,
     is_empty_storage_error,
@@ -283,6 +286,34 @@ class TestStoredRollupServing:
             raw, T0.timestamp(), end, self.NOW, stored=reader
         )
         assert out.count() == 2 * 120  # derived 1m frame
+
+    def test_stored_frame_build_runs_no_job(self, spark, stores):
+        # the declared schema replaces a footer-reading inference job
+        _, paths = stores
+        sc = spark.sparkContext
+        sc.setJobGroup("stored-frame-build", "stored frame build", False)
+        try:
+            frame = stored_rollup_reader(spark, paths)("metrics_1m")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert frame is not None and "value_last" in frame.columns
+        assert list(sc.statusTracker().getJobIdsForGroup(
+            "stored-frame-build")) == []
+
+    def test_stores_have_the_declared_schema(self, spark, stores):
+        # serving reads the stores with ROLLUP_STORED_SCHEMA instead of
+        # inferring it: what the job writes at every grain must read
+        # back as exactly that (nullability aside: a parquet read makes
+        # every column nullable)
+        _, paths = stores
+
+        def shape(schema):
+            return [(f.name, f.dataType.simpleString()) for f in schema]
+
+        for path in paths.values():
+            assert shape(spark.read.parquet(path).schema) == shape(
+                ROLLUP_STORED_SCHEMA
+            )
 
     def test_empty_store_dir_is_none_not_error(self, spark, tmp_path):
         d = tmp_path / "metrics_1m"
