@@ -185,14 +185,16 @@ def apply_retention(df: DataFrame, retention: str, now=None) -> DataFrame:
 
 def _partition_dates(spark, path: str) -> set[str]:
     """Dates (date=YYYY-MM-DD partition values) present under a metrics
-    table path — driver-side file-listing metadata only, no data scan."""
-    try:
-        files = spark.read.parquet(path).inputFiles()
-    except Exception:  # path doesn't exist yet -> nothing rolled up
+    table path: one directory listing, no schema inference, no Spark
+    job."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(root):  # nothing rolled up yet
         return set()
-    return {
-        f.split("date=")[1].split("/")[0] for f in files if "date=" in f
-    }
+    names = [
+        s.getPath().getName() for s in fs.listStatus(root) if s.isDirectory()
+    ]
+    return {n[len("date="):] for n in names if n.startswith("date=")}
 
 
 # what incremental_rollup_job stores at every grain, partition column
@@ -247,11 +249,10 @@ def incremental_rollup_job(
     out = rollup_raw_to_1m(raw, grain).withColumn(
         "date", F.to_date("timestamp")
     ).select(*ROLLUP_STORED_SCHEMA.fieldNames())
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "dynamic")
-    try:
-        out.write.mode("overwrite").partitionBy("date").parquet(out_path)
-    finally:
-        spark.conf.set(key, prev)
+    (
+        out.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("date")
+        .parquet(out_path)
+    )
     return todo

@@ -2187,277 +2187,79 @@ def _stored_bucket_rate_merged(
     merge to one le-DELTA bucket array per (by-labels, window) — the
     frame both the quantile walk and the fraction kernel consume.
 
-    Two kernel forms, selected by the ``spark.cmp.bucketRate
-    .arrayKernel`` session conf (a plan-construction-time switch, not
-    a data probe):
-
-    - **exploded** (default): explode the bucket arrays, run the
-      shared Window+HashAggregate extrapolatedRate kernel per
-      (series, le) — whole-stage-codegen'd, the fastest form where
-      shuffle is cheap (measured: on local[32] at sf0.1 it beats the
-      array form's noop by ~15-25% on all three graded rows).
-    - **array** (r12, verdict item 6 — enable at scale): samples
-      shuffle ONCE at sample grain with the compact pairs array as
-      payload; per (series, window) the per-le rates come from one
-      row-local sorted-run fold over the flattened (le, ts, tb,
-      count) entries. The ladder fan-out never crosses the exchange
-      (shuffle rows ÷ ladder width, bytes ÷ the repeated key
-      overhead — the guide-§2.2 quadratic-block lever), the
-      pre-kernel Generate and the Window/lag pass are gone; the only
-      remaining Generate explodes the per-series RATE arrays at
-      series × window grain. Locally SLOWER: the fold is interpreted
-      (HOFs are CodegenFallback) and a local shuffle is nearly free,
-      so the trade only pays when the exchange dominates. The fold
-      replicates functions/rate.py::_kernel_exprs' arithmetic
-      expression-for-expression, so values hash identically (oracle
-      PASS on all three graded rows in BOTH forms; equality pinned by
-      tests/test_promql_r8.py::test_bucket_rate_array_kernel_matches).
+    The kernel explodes the bucket arrays and runs the shared
+    Window+HashAggregate extrapolatedRate kernel per (series, le),
+    whole-stage-codegen'd.
     """
-    has_sid = "sample_id" in df.columns
-    tb = F.col("sample_id") if has_sid else F.lit(0)
-    use_array = (
-        df.sparkSession.conf.get(
-            "spark.cmp.bucketRate.arrayKernel", "false"
-        )
-        == "true"
+    from clickhouse_metrics_pipeline_spark.functions.rate import (
+        rate_over_window,
     )
+
+    tb = F.col("sample_id") if "sample_id" in df.columns else F.lit(0)
     mode = "increase" if q.func == "increase" else "rate"
-    if use_array:
-        bucket = F.timestamp_seconds(
-            F.floor(F.unix_timestamp("ts") / q.range_s) * q.range_s
-        )
-        base = df.where(
-            pairs.isNotNull() & (F.size(pairs) > 0)
-        ).select(
+    # r11 optimization (guide §1.2 step 2, §4.1): computing _sk in
+    # the SAME select as the explode placed the series_key
+    # projection ABOVE the Generate node — once per (row ×
+    # ladder-width) exploded row instead of once per input row. A
+    # select BEFORE the explode keeps the canonicalization below
+    # the Generate; projects do not migrate through Generate. The
+    # by-labels join the window partition keys so the kernel's
+    # aggregate stays a HashAggregate (guide §2.4/§5).
+    exploded = (
+        df.where(pairs.isNotNull() & (F.size(pairs) > 0))
+        .select(
             *_by_keys(q),
             _sk_expr(df).alias("_sk"),
-            bucket.alias("bucket_ts"),
             F.col("ts"),
             tb.alias("_tb"),
             pairs.alias("_pairs"),
         )
-        grouped = base.groupBy(*q.by, "_sk", "bucket_ts").agg(
-            F.collect_list(
-                F.struct(F.col("ts"), F.col("_tb"), F.col("_pairs"))
-            ).alias("_samples")
+        .select(
+            *q.by,
+            "_sk",
+            "ts",
+            "_tb",
+            F.explode("_pairs").alias("b"),
         )
-        per_le = (
-            grouped.select(
-                *q.by,
-                "bucket_ts",
-                _le_rates(q.range_s, mode).alias("_rates"),
-            )
-            .select(
-                *q.by, "bucket_ts", F.explode("_rates").alias("b")
-            )
-            .groupBy(*q.by, "bucket_ts", F.col("b.le").alias("le"))
-            .agg(F.sum("b.micro").alias("count"))
+        .select(
+            *q.by,
+            "_sk",
+            "ts",
+            "_tb",
+            *_le_key(F.col("b.le")),
+            F.col("b.count").cast("double").alias("_cum"),
         )
-    else:
-        from clickhouse_metrics_pipeline_spark.functions.rate import (
-            rate_over_window,
+    )
+    # the Window and its aggregate partition on the string key
+    # ``_lek``, not the double ``le``: Catalyst wraps a floating
+    # Window key in NaN/-0.0 normalization, which the aggregate's
+    # bare ``le`` does not match, so it shuffled a second time
+    rated = rate_over_window(
+        exploded,
+        [*q.by, "_sk", "_lek", "le"],
+        q.range_s,
+        value_col="_cum",
+        tiebreak_col="_tb",
+        mode=mode,
+        window_cols=[*q.by, "_sk", "_lek"],
+    )
+    per_le = (
+        rated.where(F.col("rate").isNotNull())
+        .select(
+            *q.by,
+            "bucket_ts",
+            "le",
+            F.round(F.col("rate") * 1e6)
+            .cast("bigint")
+            .alias("_r"),
         )
-
-        # r11 optimization (guide §1.2 step 2, §4.1): computing _sk in
-        # the SAME select as the explode placed the series_key
-        # projection ABOVE the Generate node — once per (row ×
-        # ladder-width) exploded row instead of once per input row. A
-        # select BEFORE the explode keeps the canonicalization below
-        # the Generate; projects do not migrate through Generate. The
-        # by-labels join the window partition keys so the kernel's
-        # aggregate stays a HashAggregate (guide §2.4/§5).
-        exploded = (
-            df.where(pairs.isNotNull() & (F.size(pairs) > 0))
-            .select(
-                *_by_keys(q),
-                _sk_expr(df).alias("_sk"),
-                F.col("ts"),
-                tb.alias("_tb"),
-                pairs.alias("_pairs"),
-            )
-            .select(
-                *q.by,
-                "_sk",
-                "ts",
-                "_tb",
-                F.explode("_pairs").alias("b"),
-            )
-            .select(
-                *q.by,
-                "_sk",
-                "ts",
-                "_tb",
-                *_le_key(F.col("b.le")),
-                F.col("b.count").cast("double").alias("_cum"),
-            )
-        )
-        # the Window and its aggregate partition on the string key
-        # ``_lek``, not the double ``le``: Catalyst wraps a floating
-        # Window key in NaN/-0.0 normalization, which the aggregate's
-        # bare ``le`` does not match, so it shuffled a second time
-        rated = rate_over_window(
-            exploded,
-            [*q.by, "_sk", "_lek", "le"],
-            q.range_s,
-            value_col="_cum",
-            tiebreak_col="_tb",
-            mode=mode,
-            window_cols=[*q.by, "_sk", "_lek"],
-        )
-        per_le = (
-            rated.where(F.col("rate").isNotNull())
-            .select(
-                *q.by,
-                "bucket_ts",
-                "le",
-                F.round(F.col("rate") * 1e6)
-                .cast("bigint")
-                .alias("_r"),
-            )
-            .groupBy(*q.by, "bucket_ts", "le")
-            .agg(F.sum("_r").alias("count"))
-        )
+        .groupBy(*q.by, "bucket_ts", "le")
+        .agg(F.sum("_r").alias("count"))
+    )
     return per_le.groupBy(*q.by, "bucket_ts").agg(
         F.array_sort(F.collect_list(F.struct("le", "count"))).alias(
             "buckets"
         )
-    )
-
-
-@memo_expr
-def _le_rates(range_s: int, mode: str) -> Column:
-    """The array-form extrapolatedRate kernel: from a ``_samples``
-    column (array of (ts, _tb, _pairs)) and the row's ``bucket_ts``,
-    produce array<struct<le double, micro bigint>> — one entry per le
-    whose counter rates non-NULL in this window.
-
-    One flatten → one array_sort by (le, time) → one aggregate fold
-    that carries (first, last, corr, n, first_s, last_s) per le-run
-    and finalizes a run at every le boundary. Arithmetic is
-    expression-for-expression the rate kernel's: result_v = last -
-    first + corr; boundary extrapolation capped at 1.1× the average
-    sample interval with the counter zero-crossing clamp; NULL (no
-    entry) when n < 2 or the sampled interval is empty; round(·, 6)
-    then round(rate·1e6) micro-units, exactly the two-step rounding
-    the exploded form applied."""
-    range_start = F.unix_timestamp("bucket_ts").cast("double")
-    flat = F.flatten(
-        F.transform(
-            F.col("_samples"),
-            lambda s: F.transform(
-                s["_pairs"],
-                lambda p: F.struct(
-                    p["le"].alias("le"),
-                    (F.unix_micros(s["ts"]) / 1e6).alias("ts_s"),
-                    s["_tb"].alias("tb"),
-                    p["count"].cast("double").alias("v"),
-                ),
-            ),
-        )
-    )
-    entries = F.array_sort(flat)
-
-    out_t = "array<struct<le:double,micro:bigint>>"
-    empty_out = F.array().cast(out_t)
-
-    def acc_struct(le, fv, lv, fs, ls, n, corr, out):
-        return F.struct(
-            le.alias("le"),
-            fv.alias("fv"),
-            lv.alias("lv"),
-            fs.alias("fs"),
-            ls.alias("ls"),
-            n.alias("n"),
-            corr.alias("corr"),
-            out.alias("out"),
-        )
-
-    init = acc_struct(
-        F.lit(None).cast("double"),
-        F.lit(None).cast("double"),
-        F.lit(None).cast("double"),
-        F.lit(None).cast("double"),
-        F.lit(None).cast("double"),
-        F.lit(0).cast("bigint"),
-        F.lit(0.0),
-        empty_out,
-    )
-
-    def finalize(acc):
-        # functions/rate.py::_kernel_exprs' extrapolation, verbatim
-        result_v = acc["lv"] - acc["fv"] + acc["corr"]
-        sampled = acc["ls"] - acc["fs"]
-        avg_iv = sampled / (acc["n"] - 1)
-        dur_start0 = acc["fs"] - range_start
-        dur_end = range_start + F.lit(float(range_s)) - acc["ls"]
-        dur_zero = sampled * (acc["fv"] / result_v)
-        dur_start = F.when(
-            (result_v > 0)
-            & (acc["fv"] >= 0)
-            & (dur_zero < dur_start0),
-            dur_zero,
-        ).otherwise(dur_start0)
-        threshold = avg_iv * 1.1
-        ext_start = F.when(dur_start < threshold, dur_start).otherwise(
-            avg_iv / 2
-        )
-        ext_end = F.when(dur_end < threshold, dur_end).otherwise(
-            avg_iv / 2
-        )
-        extrapolated = result_v * (
-            (sampled + ext_start + ext_end) / sampled
-        )
-        val = (
-            extrapolated / F.lit(float(range_s))
-            if mode == "rate"
-            else extrapolated
-        )
-        rate = F.when(
-            (acc["n"] >= 2) & (sampled > 0), F.round(val, 6)
-        )
-        micro = F.round(rate * 1e6).cast("bigint")
-        return F.when(
-            rate.isNotNull(),
-            F.array(
-                F.struct(acc["le"].alias("le"), micro.alias("micro"))
-            ).cast(out_t),
-        ).otherwise(empty_out)
-
-    def step(acc, x):
-        is_new = (acc["n"] == 0) | (x["le"] != acc["le"])
-        flushed = F.when(
-            (acc["n"] > 0) & (x["le"] != acc["le"]),
-            F.concat(acc["out"], finalize(acc)),
-        ).otherwise(acc["out"])
-        return F.when(
-            is_new,
-            acc_struct(
-                x["le"], x["v"], x["v"], x["ts_s"], x["ts_s"],
-                F.lit(1).cast("bigint"), F.lit(0.0), flushed,
-            ),
-        ).otherwise(
-            acc_struct(
-                acc["le"],
-                acc["fv"],
-                x["v"],
-                acc["fs"],
-                x["ts_s"],
-                acc["n"] + F.lit(1).cast("bigint"),
-                acc["corr"]
-                + F.when(x["v"] < acc["lv"], acc["lv"]).otherwise(
-                    F.lit(0.0)
-                ),
-                acc["out"],
-            )
-        )
-
-    return F.aggregate(
-        entries,
-        init,
-        step,
-        lambda acc: F.when(
-            acc["n"] > 0, F.concat(acc["out"], finalize(acc))
-        ).otherwise(acc["out"]),
     )
 
 
@@ -3774,12 +3576,8 @@ def compile_promql(
     ``bucket_ts``, and ``value`` (BIGINT; see the exactness contract
     in the module docstring). Memoized (plan_memo.py) by the query
     and the series frame object."""
-    # the array-kernel conf picks the plan at construction: part of the key
-    kernel = series.sparkSession.conf.get(
-        "spark.cmp.bucketRate.arrayKernel", "false"
-    )
     try:
-        key = ("promql", query, kernel, series)
+        key = ("promql", query, series)
         hash(key)
     except TypeError:
         return _compile_promql_uncached(query, series)

@@ -213,13 +213,13 @@ def routed_series_frame(
 class StoredFirstCatalog:
     """Remote Read's :class:`plans.remote_read.MetricsCatalog` shape
     for a live deployment (r10, extracted from ``scripts/serve.py`` so
-    the stored-table preference is unit-testable): re-lists the raw
-    parquet path per request (a cached DataFrame pins its first scan's
-    file listing), serves rollup resolutions from the STORED parquet
-    the incremental jobs maintain — the reference's ``selectTable``
-    reads a precomputed MV table (``promread/handler.go:304-321``) —
-    and falls back to on-demand derivation only before the first
-    rollup job has committed."""
+    the stored-table preference is unit-testable): re-reads the raw
+    sink's ``_spark_metadata`` log per request (a cached DataFrame pins
+    its first scan's file list), serves rollup resolutions from the
+    STORED parquet the incremental jobs maintain — the reference's
+    ``selectTable`` reads a precomputed MV table
+    (``promread/handler.go:304-321``) — and falls back to on-demand
+    derivation only before the first rollup job has committed."""
 
     def __init__(self, spark, raw_path: str, stored=None) -> None:
         self._spark = spark

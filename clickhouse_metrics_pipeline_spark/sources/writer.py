@@ -200,16 +200,13 @@ def retention_sweep(
     }
 
 
-def _rewrite_partition_swap(fs, hpath, base_path, name, df, job: str, tmp_suffix: str = "") -> None:
+def _rewrite_partition_swap(fs, hpath, base_path, name, df, job: str) -> None:
     """Crash-safe in-place rewrite of one partition directory: write the
     replacement rows to a hidden tmp dir, then a checked two-rename
     trash swap. A crash mid-swap leaves the old rows intact under a
     hidden ``.{name}__rewrite_old`` dir for manual recovery instead of
     lost (note rename is a copy on object stores). Shared by
-    retention_sweep, compact_partitions, and compact_ingest_sink
-    (``tmp_suffix`` places the rewrite under a sub-partition dir inside
-    the swapped directory, e.g. ``/batch=-1`` for the batch-keyed
-    ingest-sink layout)."""
+    retention_sweep and compact_partitions."""
     part = f"{base_path}/{name}"
     tmp = f"{base_path}/.{name}__rewrite_tmp"
     trash = f"{base_path}/.{name}__rewrite_old"
@@ -227,12 +224,12 @@ def _rewrite_partition_swap(fs, hpath, base_path, name, df, job: str, tmp_suffix
     # happened between the tmp write and the first rename, so the live
     # partition is intact and the tmp holds only an incomplete
     # replacement. Auto-delete it and proceed instead of poisoning
-    # every subsequent micro-batch until a human intervenes
-    # (tests/test_streaming.py plants a stale tmp and asserts the next
-    # sink batch self-heals).
+    # every subsequent sweep until a human intervenes
+    # (tests/test_bucketed_write.py plants a stale tmp and asserts the
+    # next sweep self-heals).
     if fs.exists(hpath(tmp)):
         fs.delete(hpath(tmp), True)
-    df.write.mode("overwrite").parquet(tmp + tmp_suffix)
+    df.write.mode("overwrite").parquet(tmp)
     # swap via a trash rename, never delete-before-rename: a
     # crash between the two renames leaves the old data intact
     # under the trash name instead of lost. Hadoop rename
@@ -311,104 +308,6 @@ def compact_partitions(
             if f.isFile() and not f.getPath().getName().startswith(("_", "."))
         )
         compacted.append(f"{name}:{len(files)}->{n_after}")
-    return {"compacted": sorted(compacted), "skipped": sorted(skipped)}
-
-
-def _count_data_files(fs, status) -> tuple[int, int]:
-    """(n_files, total_bytes) over data files under a dir, recursing one
-    level into sub-partition dirs (the ``date=D/batch=K`` sink layout)."""
-    n, total = 0, 0
-    for f in fs.listStatus(status.getPath()):
-        name = f.getPath().getName()
-        if name.startswith(("_", ".")):
-            continue
-        if f.isFile():
-            n += 1
-            total += f.getLen()
-        else:
-            for g in fs.listStatus(f.getPath()):
-                gname = g.getPath().getName()
-                if g.isFile() and not gname.startswith(("_", ".")):
-                    n += 1
-                    total += g.getLen()
-    return n, total
-
-
-def compact_ingest_sink(
-    spark: SparkSession,
-    base_path: str,
-    max_files: int = 8,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    sort_key: list[str] | None = None,
-    defer_batch_geq: int | None = None,
-) -> dict[str, list[str]]:
-    """Compaction for the batch-keyed streaming-ingest layout
-    (``date=D/batch=K/part-*.parquet``, see
-    ``streaming.pipeline.ingest_stream``): collapses a date partition's
-    per-micro-batch sub-dirs into few files under ``batch=-1``, keeping
-    the two-level partition layout intact so idempotent batch replays
-    (dynamic overwrite of ``(date, batch)``) and partition discovery
-    keep working. Already-compacted or large partitions are skipped
-    (idempotent); the swap is the same crash-safe trash-rename as
-    retention_sweep.
-
-    MUST only fold COMMITTED batches. The ingest sink calls it at
-    micro-batch START with ``defer_batch_geq=<current batch id>``: in
-    the normal sequential flow every dir present is a committed earlier
-    batch, but a REPLAYED batch (crash between its parquet write and
-    its checkpoint commit) finds its own crashed attempt's ``batch=K``
-    dir already on disk — folding that into ``batch=-1`` and then
-    re-writing the batch would duplicate its rows. Any date partition
-    still holding a ``batch=K`` dir with ``K >= defer_batch_geq`` is
-    therefore deferred to the next boundary, by which time the batch
-    has committed."""
-    import math
-
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(base_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    compacted, skipped = [], []
-    for status in fs.listStatus(hpath(base_path)):
-        name = status.getPath().getName()
-        if not name.startswith("date="):
-            continue
-        if defer_batch_geq is not None:
-            sub_ids = [
-                int(f.getPath().getName().split("=", 1)[1])
-                for f in fs.listStatus(status.getPath())
-                if f.isDirectory()
-                and f.getPath().getName().startswith("batch=")
-            ]
-            if any(k >= defer_batch_geq for k in sub_ids):
-                skipped.append(name)
-                continue
-        n_files, total = _count_data_files(fs, status)
-        if n_files <= max_files or total / max(n_files, 1) >= target_file_bytes:
-            skipped.append(name)
-            continue
-        n_out = max(1, math.ceil(total / target_file_bytes))
-        part_df = (
-            spark.read.parquet(f"{base_path}/{name}")
-            .drop("batch")
-            .coalesce(n_out)
-        )
-        key = sort_key if sort_key is not None else SORT_KEY
-        key = [c for c in key if c in part_df.columns]
-        if key:
-            part_df = part_df.sortWithinPartitions(*key)
-        _rewrite_partition_swap(
-            fs,
-            hpath,
-            base_path,
-            name,
-            part_df,
-            job="compact_ingest_sink",
-            tmp_suffix="/batch=-1",
-        )
-        n_after, _ = _count_data_files(
-            fs, fs.getFileStatus(hpath(f"{base_path}/{name}"))
-        )
-        compacted.append(f"{name}:{n_files}->{n_after}")
     return {"compacted": sorted(compacted), "skipped": sorted(skipped)}
 
 

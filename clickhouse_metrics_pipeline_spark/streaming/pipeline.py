@@ -5,9 +5,10 @@ writer batch (1000 rows / 10 s) -> ClickHouse
 (``internal/processor/processor.go:79-87``, ``clickhouse/writer.go:91-145``).
 Spark-native form: a file/Kafka drop-zone source -> validation ->
 stateful cumulative->delta conversion keyed by series_hash
-(``applyInPandasWithState``) -> idempotent ``foreachBatch`` parquet sink
-with a 10 s processing-time trigger (S5's ticker is the trigger; the
-double buffering collapses into micro-batching).
+(``applyInPandasWithState``) -> Spark's exactly-once parquet file sink,
+one ``date=`` directory per day, with a 10 s processing-time trigger
+(S5's ticker is the trigger; the double buffering collapses into
+micro-batching).
 
 Improvements over the reference, kept deliberately:
 - state TTL evicts idle series (the reference's maps grow forever -
@@ -94,7 +95,7 @@ _OUTPUT_SCHEMA = (
 )
 # the ingest sink's partition columns, in directory order, and the
 # stored table with them, which serving reads it with
-_SINK_PARTITIONS = {"date": "date", "batch": "int"}
+_SINK_PARTITIONS = {"date": "date"}
 SINK_STORED_SCHEMA = _OUTPUT_SCHEMA + "".join(
     f", {c} {t}" for c, t in _SINK_PARTITIONS.items()
 )
@@ -974,9 +975,6 @@ def ingest_stream(
     workspace_id: str = "default",
     trigger_seconds: int = 10,
     available_now: bool = False,
-    compact_every: int | None = None,
-    compact_max_files: int = 8,
-    compact_target_bytes: int = 128 * 1024 * 1024,
 ):
     """Full streaming ingest: validate -> stamp -> delta-convert ->
     partitioned parquet sink, 10 s trigger (cmd/main.go:181-207 defaults).
@@ -986,61 +984,49 @@ def ingest_stream(
     rows the backlog is committed, and the caller stops the query. The
     processing-time query can continue on the drain's checkpoint.
 
-    The sink is IDEMPOTENT UNDER REPLAY, not just under clean restart:
-    rows land under ``date=D/batch=K`` and each micro-batch writes with
-    dynamic partition overwrite keyed by its batch id, so a batch
-    replayed after a crash *between the parquet write and the
-    checkpoint commit* (the at-least-once window of a plain append
-    ``foreachBatch``) overwrites its own partitions instead of
-    appending a second copy. Readers see one extra ``batch`` partition
-    column (droppable); ``batch=-1`` holds compacted rows.
+    The sink is Spark's parquet file sink, partitioned by ``date``
+    only. Each micro-batch records the files it wrote in the sink's
+    ``_spark_metadata`` log, and a reader of ``out_path`` reads that
+    log instead of listing directories. So the sink is exactly-once
+    under replay: a batch replayed after a crash between its file write
+    and its checkpoint commit is skipped when the log already holds it,
+    and otherwise rewritten while the crashed attempt's files, which
+    the log never names, stay invisible.
 
-    ``compact_every=N`` runs :func:`sources.writer.compact_ingest_sink`
-    at the START of every Nth micro-batch — inside ``foreachBatch``, so
-    the sweep is serialized with the writes (no concurrent writer ever
-    races the trash-swap) and sees only committed batches; a replayed
-    batch's crashed-attempt dir is detected (``defer_batch_geq``) and
-    that partition's sweep deferred, so an uncommitted batch is never
-    folded into ``batch=-1`` and then re-written (which would duplicate
-    it). MergeTree gets the same effect from its merge scheduler.
+    A sink written before this layout (``date=D/batch=K`` directories,
+    no ``_spark_metadata``) is refused: the file sink would hide its
+    rows from every reader. Ingest into a new directory instead.
 
     Returns the StreamingQuery handle."""
     from pyspark.sql import functions as F
 
-    from clickhouse_metrics_pipeline_spark.operators.validate import validate
-    from clickhouse_metrics_pipeline_spark.sources.writer import (
-        compact_ingest_sink,
+    from clickhouse_metrics_pipeline_spark.operators.rollup import (
+        _partition_dates,
     )
+    from clickhouse_metrics_pipeline_spark.operators.validate import validate
+
+    spark = raw_stream.sparkSession
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    fs = hpath(out_path).getFileSystem(spark._jsc.hadoopConfiguration())
+    if _partition_dates(spark, out_path) and not fs.exists(
+        hpath(out_path, "_spark_metadata")
+    ):
+        raise ValueError(
+            f"{out_path} holds date= partitions but no _spark_metadata "
+            "log: it was written by an older ingest sink, whose rows the "
+            "file sink would not read; ingest into a new directory"
+        )
 
     validated = validate(raw_stream, workspace_id=workspace_id)
     converted = delta_convert_stream(split_buckets(validated))
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_ingest_sink(
-                batch_df.sparkSession,
-                out_path,
-                max_files=compact_max_files,
-                target_file_bytes=compact_target_bytes,
-                # a replayed batch finds its crashed attempt's dir on
-                # disk; folding it would duplicate rows on the re-write
-                defer_batch_geq=batch_id,
-            )
-        (
-            batch_df.withColumn(
-                "date", F.to_date("timestamp").cast(_SINK_PARTITIONS["date"])
-            )
-            .withColumn(
-                "batch", F.lit(batch_id).cast(_SINK_PARTITIONS["batch"])
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*_SINK_PARTITIONS)
-            .parquet(out_path)
+    writer = (
+        converted.withColumn(
+            "date", F.to_date("timestamp").cast(_SINK_PARTITIONS["date"])
         )
-
-    writer = converted.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint
+        .writeStream.format("parquet")
+        .partitionBy(*_SINK_PARTITIONS)
+        .option("path", out_path)
+        .option("checkpointLocation", checkpoint)
     )
     if available_now:
         writer = writer.trigger(availableNow=True)

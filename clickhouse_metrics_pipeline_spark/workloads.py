@@ -1783,107 +1783,6 @@ _ROTATION_FIRST_R12: list[str] = [
     "events_stddev_over_time",
 ]
 
-# --------------------------------------------------------------------------
-# Driver-coverage rotation (round 11 — superseded by the r12 list above,
-# kept for the audit trail)
-# --------------------------------------------------------------------------
-# The driver's correctness snapshot grades the FIRST 50 entries of
-# ``queries()`` (dict insertion order). Round-11 window = the r10
-# verdict's item 1, exactly:
-# (a) the 24 heavy rows whose last driver grade is r7 — the named
-#     deferrals from the r10 rotation comment, heaviest-first — at
-#     the head;
-# (b) the eight rows added in r10 that have never been driver-graded
-#     (all judge-gate green in the r10 session's 182/182 gate):
-#     promql_rate_bucket_p95, promql_exp_hist_p99,
-#     promql_quantile_raw_fallback, promql_at_modifier,
-#     promql_hist_fraction_interp, promql_exp_rate_p95,
-#     promql_hist_count_rate, promql_hist_sum_rate;
-# (c) 18 of the 50 rows whose last driver grade is r8, chosen
-#     cheapest-first by BENCH_r10 warm time (headline + coverage
-#     sets) so the window stays cheap. The 32 remaining r8 rows are
-#     deferred to LEAD the round-12 window (by BENCH_r10 warm sec:
-#     events_rollup_incremental 4.83, emb_srp_semantic_dedup 1.22,
-#     promql_scalar_sum_rate 1.10, emb_srp_int8_pairs 0.95,
-#     q8_market_share 0.90, promql_deriv_by_type 0.82,
-#     q7_volume_shipping 0.81, hist_percentile_events 0.75,
-#     hist_percentile_prom_events 0.74, emb_ivf_int_topk 0.72,
-#     promql_predict_by_type 0.70, docs_rare_bigram_rate 0.65,
-#     emb_pq_int_adc_topk 0.62, q11_important_stock 0.61,
-#     q10_returned_items 0.53, events_predict_linear 0.52,
-#     q17_small_quantity 0.51, events_series_correlation 0.48,
-#     q12_priority_shipping 0.46, q16_supplier_count 0.44,
-#     promql_resets_by_type 0.43, emb_label_centroids 0.43,
-#     promql_stdvar_by_type 0.43, events_absent_series 0.42,
-#     q15_top_supplier 0.41, promql_stddev_max_by_type 0.40,
-#     promql_changes_by_type 0.39, docs_stopword_profile 0.39,
-#     events_holt_winters 0.37, promql_absent_gap 0.36,
-#     events_summary_quantiles 0.35, events_delta_1h 0.33),
-#     together with the rows added in r11 (local-gate green,
-#     driver-graded r12): promql_increase_bucket_p95,
-#     promql_exp_hist_fraction, promql_per_second_avg,
-#     promql_group_right_ratio, promql_rate_hist_fraction,
-#     promql_exp_rate_fraction.
-# After this window no oracle-backed row's driver evidence is older
-# than r8, every r10 addition is driver-graded, and the only rows
-# older than r9 are the 32 named r8 deferrals. Names are frozen;
-# only order changes.
-_ROTATION_FIRST: list[str] = [
-    # (a) the 24 r7-stale heavy deferrals, heaviest-first
-    "events_delta_stream",
-    "events_rollup_stream_1m",
-    "docs_language_id",
-    "docs_incremental_pairs",
-    "docs_bloom_decontaminate",
-    "events_hash_sample_quantiles",
-    "promql_irate_by_type",
-    "docs_source_overlap",
-    "docs_minhash_lsh_32band",
-    "docs_training_pipeline",
-    "multimodal_resize_chain",
-    "docs_bpe_top_merges",
-    "events_rollup_1h",
-    "events_exemplar_cap",
-    "docs_mixture_sample",
-    "events_lttb_downsample",
-    "events_exemplar_trace_join",
-    "events_funnel_levels",
-    "events_funnel_conversions",
-    "events_rollup_cascade",
-    "q22_global_sales",
-    "promql_q90_over_time",
-    "events_retention_cohorts",
-    "events_hash_sample_cascade",
-    # (b) the eight never-driver-graded r10 rows
-    "promql_rate_bucket_p95",
-    "promql_exp_hist_p99",
-    "promql_quantile_raw_fallback",
-    "promql_at_modifier",
-    "promql_hist_fraction_interp",
-    "promql_exp_rate_p95",
-    "promql_hist_count_rate",
-    "promql_hist_sum_rate",
-    # (c) 18 cheapest r8-graded rows (32 heaviest lead r12)
-    "events_rolling_mean",
-    "events_histogram_fraction",
-    "events_pivot_daily",
-    "emb_norm_stats",
-    "events_staleness_report",
-    "events_active_series_churn",
-    "events_heatmap_grid",
-    "events_resets_1h",
-    "events_user_enrich_topk",
-    "docs_token_topk",
-    "docs_decontaminate",
-    "events_changes_1h",
-    "events_alert_for",
-    "events_top_movers",
-    "events_seasonal_profile",
-    "docs_repetition_filter",
-    "events_wow_ratio",
-    "docs_length_histogram",
-]
-
 
 def _rotate(d: dict) -> dict:
     head = {k: d[k] for k in _ROTATION_FIRST_R12 if k in d}

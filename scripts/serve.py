@@ -82,9 +82,11 @@ def main() -> None:
     )
 
     stored = stored_rollup_reader(spark, rollup_paths)
-    # Re-lists raw per request; serves rollup resolutions from the
-    # STORED parquet the incremental jobs below maintain (r9 verdict
-    # item 2); derives on demand only before the first rollup commit.
+    # Reads raw per request from the ingest sink's _spark_metadata log
+    # (no directory listing, no Spark job); serves rollup resolutions
+    # from the STORED parquet the incremental jobs below maintain (r9
+    # verdict item 2); derives on demand only before the first rollup
+    # commit.
     catalog = StoredFirstCatalog(spark, out, stored)
 
     receiver = make_otlp_http_server(drop, port=args.otlp_port)

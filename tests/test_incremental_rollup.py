@@ -71,3 +71,46 @@ def test_incremental_rollup(spark, tmp_path_factory):
     write_metrics_table(late, raw_path)
     assert incremental_rollup_job(spark, raw_path, out_path) == ["2024-06-03"]
     assert _rollup_rows(spark, out_path) == _full_recompute_rows(spark, raw_path)
+
+
+def test_partition_dates_runs_no_job(spark, tmp_path):
+    # the dates come from one directory listing, not from a read that
+    # infers the schema from the parquet footers
+    from clickhouse_metrics_pipeline_spark.operators.rollup import (
+        _partition_dates,
+    )
+
+    raw_path = str(tmp_path / "raw")
+    write_metrics_table(seed_metrics(spark, now=DAY0), raw_path)
+    write_metrics_table(seed_metrics(spark, now=DAY1), raw_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("partition-dates", "partition dates", False)
+    try:
+        dates = _partition_dates(spark, raw_path)
+        missing = _partition_dates(spark, str(tmp_path / "absent"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert dates == {"2024-06-01", "2024-06-02"} and missing == set()
+    assert list(sc.statusTracker().getJobIdsForGroup("partition-dates")) == []
+
+
+def test_rollup_write_leaves_the_session_conf_alone(spark, tmp_path, monkeypatch):
+    # the job asks its own writer for dynamic partition overwrite; the
+    # session conf, which concurrent jobs and requests share, is never
+    # changed, not even while the write runs
+    from pyspark.sql import DataFrameWriter
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    raw_path, out_path = str(tmp_path / "raw"), str(tmp_path / "1m")
+    write_metrics_table(seed_metrics(spark, now=DAY0), raw_path)
+    seen = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *a, **kw):
+        seen.append(spark.conf.get(key))
+        return parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    before = spark.conf.get(key)
+    assert incremental_rollup_job(spark, raw_path, out_path) == ["2024-06-01"]
+    assert seen == [before] and spark.conf.get(key) == before

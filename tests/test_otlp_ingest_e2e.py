@@ -12,11 +12,14 @@ from __future__ import annotations
 
 import json
 import math
+import os
+import shutil
 import time
 
 import pytest
 
 from clickhouse_metrics_pipeline_spark.functions.histogram import bucket_percentile
+from clickhouse_metrics_pipeline_spark.plans.serving import read_stored
 from clickhouse_metrics_pipeline_spark.sources.otlp import otlp_json_stream
 from clickhouse_metrics_pipeline_spark.streaming.pipeline import (
     SINK_STORED_SCHEMA,
@@ -104,8 +107,9 @@ def _export_request():
 
 def test_sink_has_the_declared_schema(spark, tmp_path):
     # serving reads the sink with SINK_STORED_SCHEMA instead of
-    # inferring it: what ingest writes must read back as exactly that
-    # (nullability aside: a parquet read makes every column nullable)
+    # inferring it: what ingest writes must read back as exactly that,
+    # with date as the one partition column (nullability aside: a
+    # parquet read makes every column nullable)
     drop = tmp_path / "drop"
     drop.mkdir()
     (drop / "export-0001.json").write_text(json.dumps(_export_request()) + "\n")
@@ -118,6 +122,50 @@ def test_sink_has_the_declared_schema(spark, tmp_path):
 
     declared = spark.createDataFrame([], SINK_STORED_SCHEMA).schema
     assert shape(spark.read.parquet(out).schema) == shape(declared)
+    assert shape(declared)[-1] == ("date", "date")
+
+
+def test_sink_is_one_date_level_read_from_its_manifest(spark, tmp_path):
+    # the file sink writes each batch's files straight into date=D/ and
+    # names them in its _spark_metadata log; readers of the table root
+    # read that log, so a file it does not name is never read
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    for i in range(3):
+        (drop / f"export-{i:04d}.json").write_text(
+            json.dumps(_export_request()) + "\n")
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    progress = _drain(ingest_stream(
+        otlp_json_stream(spark, str(drop), max_files_per_trigger=1),
+        out, ckpt, available_now=True))
+    assert sum(1 for p in progress if p.numInputRows) == 3
+
+    days = [d for d in os.listdir(out) if d.startswith("date=")]
+    assert days and os.path.isdir(os.path.join(out, "_spark_metadata"))
+    for d in days:
+        assert all(os.path.isfile(os.path.join(out, d, f))
+                   for f in os.listdir(os.path.join(out, d))), d
+
+    day = os.path.join(out, days[0])
+    n, n_day = (read_stored(spark, out, SINK_STORED_SCHEMA).count(),
+                spark.read.parquet(day).count())
+    part = next(f for f in os.listdir(day) if f.endswith(".parquet"))
+    shutil.copy(os.path.join(day, part), os.path.join(day, "part-stray.parquet"))
+    assert read_stored(spark, out, SINK_STORED_SCHEMA).count() == n
+    # a read of the day's directory, which has no log, sees the stray
+    assert spark.read.parquet(day).count() > n_day
+
+
+def test_old_layout_sink_is_refused(spark, tmp_path):
+    # a batch-dir sink has no _spark_metadata log: the file sink would
+    # hide all of its rows, so ingest refuses the directory
+    out = tmp_path / "out"
+    (out / "date=2026-01-01" / "batch=0").mkdir(parents=True)
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    with pytest.raises(ValueError, match="_spark_metadata"):
+        ingest_stream(otlp_json_stream(spark, str(drop)), str(out),
+                      str(tmp_path / "ckpt"), available_now=True)
 
 
 @pytest.mark.slow  # r12: excluded from the driver-completable fast gate (make test-full runs it)

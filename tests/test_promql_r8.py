@@ -651,40 +651,3 @@ def test_bucket_rate_kernel_shuffles_once_per_grouping(spark):
     df = compile_promql(q, _cum_bucket_series_frame(spark, SF))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 3
-
-
-def test_bucket_rate_array_kernel_matches_exploded(spark):
-    """r12: the conf-gated ARRAY-form stored-bucket rate kernel must
-    produce byte-identical results to the default exploded form — the
-    fold replicates the extrapolatedRate arithmetic expression for
-    expression, so every (labels, window, value) row must agree."""
-    from clickhouse_metrics_pipeline_spark.workloads_ext10 import (
-        _cum_bucket_series_frame,
-    )
-    from clickhouse_metrics_pipeline_spark.plans.promql import (
-        compile_promql,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    q = (
-        "histogram_quantile(0.95, "
-        "sum by (event_type) (rate(hist_requests[1d])))"
-    )
-    frame = _cum_bucket_series_frame(spark, sf_dir)
-
-    def rows():
-        return sorted(
-            tuple(r) for r in compile_promql(q, frame).collect()
-        )
-
-    assert spark.conf.get(
-        "spark.cmp.bucketRate.arrayKernel", "false"
-    ) == "false"
-    exploded = rows()
-    spark.conf.set("spark.cmp.bucketRate.arrayKernel", "true")
-    try:
-        arr = rows()
-    finally:
-        spark.conf.unset("spark.cmp.bucketRate.arrayKernel")
-    assert arr == exploded and exploded
-

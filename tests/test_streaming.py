@@ -561,85 +561,132 @@ class TestKmvDistinctStream:
         }
 
 
-class TestStreamingCompaction:
-    """compact_every wires small-file compaction into the ingest sink's
-    foreachBatch (serialized with the writes, so the trash-swap never
-    races a concurrent writer), and the batch-keyed dynamic overwrite
-    makes batch REPLAY idempotent — both driven through one stream so
-    the expensive micro-batch startup is paid once."""
+def _drain_files(spark, src, out, ckpt):
+    """Drain one micro-batch per file under ``src`` through
+    ``ingest_stream`` and stop once a batch read no input (the drain
+    does not end by itself); returns the progress reports."""
+    q = ingest_stream(
+        spark.readStream.schema(METRICS_RAW_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src / "*")),
+        out,
+        ckpt,
+        workspace_id="w1",
+        available_now=True,
+    )
+    deadline = time.time() + 300
+    try:
+        while not any(p["numInputRows"] == 0 for p in q.recentProgress):
+            assert q.isActive and time.time() < deadline, q.exception()
+            time.sleep(0.2)
+        return q.recentProgress
+    finally:
+        q.stop()
 
-    def test_compaction_and_replay_idempotency(self, spark, tmp_path):
+
+def _write_batch_files(spark, src, n_batches):
+    """One 2-row source file per micro-batch, one series per batch."""
+    for i in range(n_batches):
+        rows = [_gauge_row(500 + i, 2 * i + j, float(i)) for j in range(2)]
+        spark.createDataFrame(rows, METRICS_RAW_SCHEMA).coalesce(
+            1
+        ).write.parquet(str(src / f"b{i:03d}"))
+
+
+class TestIngestReplay:
+    """The ingest sink is exactly-once under replay: a micro-batch run
+    again after a crash between its sink write and its checkpoint
+    commit adds no rows."""
+
+    def test_replayed_batch_adds_no_rows(self, spark, tmp_path):
         import os
 
         src = tmp_path / "src"
         src.mkdir()
-        # 3 micro-batch files, all landing on the same ingest date
         n_batches = 3
-        for i in range(n_batches):
-            rows = [_gauge_row(500 + i, 2 * i + j, float(i)) for j in range(2)]
-            spark.createDataFrame(rows, METRICS_RAW_SCHEMA).coalesce(
-                1
-            ).write.parquet(str(src / f"b{i}"))
-
+        _write_batch_files(spark, src, n_batches)
         out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
 
-        def drain():
-            q = ingest_stream(
-                spark.readStream.schema(METRICS_RAW_SCHEMA)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(str(src / "*")),
-                out,
-                ckpt,
-                workspace_id="w1",
-                available_now=True,
-                compact_every=2,
-                # 0 = always compact: makes the replay's boundary sweep
-                # reach the defer guard (folding the crashed attempt's
-                # batch dir would duplicate its rows on the re-write)
-                compact_max_files=0,
-                compact_target_bytes=64 * 1024 * 1024,
-            )
-            q.awaitTermination(120)
-            q.stop()
-
-        drain()
+        progress = _drain_files(spark, src, out, ckpt)
         back = spark.read.parquet(out)
         assert back.count() == 2 * n_batches
         assert back.select("series_hash").distinct().count() == n_batches
 
-        def _data_files(root):
-            return [
-                os.path.join(dp, f)
-                for dp, _, fs in os.walk(root)
-                for f in fs
-                if f.endswith(".parquet") and not f.startswith(("_", "."))
-            ]
+        def forget(log_dir, first):
+            # drop the log entries (and their checksums) from ``first`` on
+            for name in os.listdir(log_dir):
+                n = name.lstrip(".").split(".")[0]
+                if n.isdigit() and int(n) >= first:
+                    os.remove(os.path.join(log_dir, name))
 
-        # compaction ran at the start of batch 2, folding batches 0-1
-        # into batch=-1; batch 2 wrote its own dir afterwards
-        parts = [p for p in os.listdir(out) if p.startswith("date=")]
-        assert parts
-        for p in parts:
-            pdir = os.path.join(out, p)
-            assert os.path.isdir(os.path.join(pdir, "batch=-1")), p
-            compacted = _data_files(os.path.join(pdir, "batch=-1"))
-            assert 1 <= len(compacted) <= 2, (p, compacted)
-            assert len(_data_files(pdir)) <= 2 + (n_batches - 2)
+        def data_files():
+            return sum(
+                f.endswith(".parquet") for _, _, fs in os.walk(out) for f in fs
+            )
 
-        # at-least-once crash window: the sink wrote the last batch but
-        # the commit marker never landed -> on restart the batch is
-        # REPLAYED. The batch-keyed dynamic overwrite must replace its
-        # own partitions, not append a second copy.
-        commits = sorted(
-            c
-            for c in os.listdir(os.path.join(ckpt, "commits"))
-            if not c.startswith(".")
-        )
-        os.remove(os.path.join(ckpt, "commits", commits[-1]))
-        drain()
+        # at-least-once crash window: the last batch that read input
+        # wrote its files but its checkpoint commit never landed, and
+        # nothing ran after it -> on restart the batch is REPLAYED
+        last = max(p["batchId"] for p in progress if p["numInputRows"])
+
+        def crash_after_write():
+            forget(os.path.join(ckpt, "commits"), last)
+            forget(os.path.join(ckpt, "offsets"), last + 1)
+
+        # (a) the sink's log holds the batch: the replay is skipped
+        crash_after_write()
+        files = data_files()
+        replay = _drain_files(spark, src, out, ckpt)
+        assert replay[0]["batchId"] == last
+        assert data_files() == files
+        assert spark.read.parquet(out).count() == 2 * n_batches
+
+        # (b) the crash also beat the sink's log entry: the batch is
+        # written again, and the first attempt's files, which the log
+        # never names, stay unread
+        crash_after_write()
+        forget(os.path.join(out, "_spark_metadata"), last)
+        replay = _drain_files(spark, src, out, ckpt)
+        assert replay[0]["batchId"] == last
+        assert replay[0]["numInputRows"] == 2
+        assert data_files() > files
         back = spark.read.parquet(out)
         assert back.count() == 2 * n_batches  # replayed, not duplicated
         assert back.select("series_hash").distinct().count() == n_batches
+
+
+class TestIngestSinkManifest:
+    def test_frame_build_runs_no_job_at_40_batches(self, spark, tmp_path):
+        """Readers resolve the sink through its _spark_metadata log, so
+        building a serving frame lists no directories: no Spark job,
+        even above Spark's 32-path parallel-listing threshold."""
+        from clickhouse_metrics_pipeline_spark.plans.serving import (
+            read_stored,
+            routed_series_frame,
+        )
+        from clickhouse_metrics_pipeline_spark.streaming.pipeline import (
+            SINK_STORED_SCHEMA,
+        )
+
+        src = tmp_path / "src"
+        src.mkdir()
+        n_batches = 40
+        _write_batch_files(spark, src, n_batches)
+        out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+        progress = _drain_files(spark, src, out, ckpt)
+        assert sum(1 for p in progress if p["numInputRows"]) == n_batches
+
+        sc = spark.sparkContext
+        sc.setJobGroup("sink-frame-build", "sink frame build", False)
+        try:
+            frame = routed_series_frame(
+                read_stored(spark, out, SINK_STORED_SCHEMA)
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(
+            "sink-frame-build")) == []
+        assert frame.count() == 2 * n_batches
 
 
 class TestStreamingHashSample:
